@@ -93,7 +93,6 @@ def main(argv: list[str] | None = None) -> int:
             g.add_argument("--max-iter", type=int, default=200)
             g.add_argument("--checkpoint-dir", default=None)
             g.add_argument("--no-resume", action="store_true")
-            g.add_argument("--kernel", default="sql", choices=["sql", "arrow"])
             g.add_argument("--salt", type=int, default=None)
             g.add_argument("--trunc-digits", type=int, default=None,
                            help="per-iteration string-truncation regime "
@@ -152,8 +151,8 @@ def main(argv: list[str] | None = None) -> int:
         from .graph.pagerank import pagerank
 
         res = pagerank(edges, mode=args.mode, alpha=args.alpha, tol=args.tol,
-                       max_iter=args.max_iter, kernel=args.kernel,
-                       salt=args.salt, checkpoint_dir=args.checkpoint_dir,
+                       max_iter=args.max_iter, salt=args.salt,
+                       checkpoint_dir=args.checkpoint_dir,
                        resume=not args.no_resume,
                        trunc_digits=args.trunc_digits)
         res.ranks.write.mode("overwrite").parquet(args.output)
@@ -163,10 +162,14 @@ def main(argv: list[str] | None = None) -> int:
 
         linf = res.linf_error if math.isfinite(res.linf_error) else None
         print(json.dumps({"iterations": res.iterations,
+                          "converged": res.converged,
                           "linf_error": linf,
                           "n_vertices": res.n_vertices,
                           "n_edges": res.n_edges,
                           "loop_secs": round(res.loop_secs, 2)}))
+        if args.tol > 0 and not res.converged:
+            # the ranks are written, but they are not the fixed point
+            return 1
     elif args.cmd == "components":
         from .graph.components import connected_components
 

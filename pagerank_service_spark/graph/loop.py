@@ -143,12 +143,25 @@ def write_checkpoint(
     os.replace(tmp, os.path.join(checkpoint_dir, "MANIFEST.json"))
 
 
-def read_checkpoint(spark: SparkSession, checkpoint_dir: str) -> tuple[DataFrame, dict] | None:
+def read_checkpoint(
+    spark: SparkSession, checkpoint_dir: str, expect: dict | None = None
+) -> tuple[DataFrame, dict] | None:
+    """The latest checkpoint's state and manifest, or None if there is none.
+
+    Every ``expect`` key must equal the manifest's value: a checkpoint
+    written for another graph or configuration raises ``ValueError``
+    instead of resuming from foreign state."""
     mf = os.path.join(checkpoint_dir, "MANIFEST.json")
     if not os.path.exists(mf):
         return None
     with open(mf) as f:
         manifest = json.load(f)
+    bad = {k: (manifest.get(k), v) for k, v in (expect or {}).items()
+           if manifest.get(k) != v}
+    if bad:
+        raise ValueError(
+            f"checkpoint in {checkpoint_dir} was written for a different "
+            f"run; (manifest, current) per field: {bad}")
     return spark.read.parquet(manifest["path"]), manifest
 
 

@@ -13,27 +13,44 @@ Two semantic modes:
 * ``mode="standard"`` — classic damped PageRank (alpha=0.85 default)
   with dangling-mass redistribution; the generic API.
 
-Physical design (what survives 100x scale-up):
+Physical design. A prepared graph takes one of two paths, chosen by
+the size of its transition table:
 
-* the transition table ``trans(src, dst, p)`` is computed ONCE
-  (collapse multi-edges -> out-degree normalize), hash-repartitioned on
-  ``src`` and persisted — the per-iteration join then reuses that
-  exchange, so each iteration shuffles only the rank vector (|V| rows),
-  never the edge table (|E| rows);
-* contributions: ``trans ⋈ ranks on src`` -> partial map-side
-  aggregation -> ``groupBy(dst).sum`` — hub-dst skew is absorbed by
-  partial aggregation; an explicit two-stage salted aggregate
-  (``salt=k``) is available for pathological hubs;
-* ``kernel="arrow"`` routes the multiply-aggregate through a
-  vectorized per-partition gather-scatter (np.add.at over a
-  dictionary-encoded local index — CSR-style) via ``mapInPandas``,
-  shrinking the shuffle into the final groupBy to one row per distinct
-  dst per partition. ``kernel="sql"`` keeps it in whole-stage codegen.
-  Both are exact; bench picks the faster.
-* dangling mass and the convergence metric are single-row aggregates
-  broadcast back through literals — never a driver-side loop over
-  collected rows;
-* lineage/AQE/checkpointing handled by graph/loop.py.
+* **in one task**, when ``trans`` has at most ``IN_TASK_MAX_EDGES``
+  rows: ``trans``, the vertex set, in-strength and any resume or
+  warm-start ranks travel as one tagged union, ``coalesce(1)``'d into a
+  single ``mapInArrow`` task. The kernel builds the vertex index once
+  (``np.searchsorted`` over the sorted vids, a CSR-style gather index),
+  runs each iteration as an ``np.bincount`` scatter plus the dangling
+  term, checks the diff every iteration and runs the reference
+  post-pass in the same task. That is one Spark job where the
+  distributed loop pays about two per iteration: at these sizes an
+  iteration's edge work is microseconds and the loop's cost is job
+  scheduling. The constant bounds what one Python worker holds (about
+  100 B of Arrow and NumPy arrays per edge) and what one core computes;
+  it is not a crossover point: one task was faster at every size
+  measured. It sits well below the 471,712 collapsed edges of the
+  benchmark's ``zipf_pagerank`` graph, so that workload keeps timing
+  the distributed loop and its scaling efficiency.
+* **distributed**, above it. The transition table ``trans(src, dst,
+  p)`` is computed ONCE (collapse multi-edges -> out-degree normalize),
+  hash-repartitioned on ``src`` and persisted — the per-iteration join
+  then reuses that exchange, so each iteration shuffles only the rank
+  vector (|V| rows), never the edge table (|E| rows). Contributions:
+  ``trans ⋈ ranks on src`` -> partial map-side aggregation ->
+  ``groupBy(dst).sum`` — hub-dst skew is absorbed by partial
+  aggregation; an explicit two-stage salted aggregate (``salt=k``) is
+  available for pathological hubs. Dangling mass and the convergence
+  metric are single-row aggregates broadcast back through literals —
+  never a driver-side loop over collected rows; lineage, AQE and
+  checkpointing are handled by graph/loop.py.
+
+``chunk``, ``metric_every``, ``salt`` and ``checkpoint_every`` tune only
+the distributed loop. The in-task path checks convergence every
+iteration and writes one checkpoint, at the end, in the same
+``(vid, rank, diff)`` layout and manifest, so either path resumes the
+other's checkpoint. A checkpoint written for a different mode, alpha or
+graph size is refused with ``ValueError`` on both paths.
 """
 
 from __future__ import annotations
@@ -41,16 +58,26 @@ from __future__ import annotations
 import time
 from collections.abc import Iterator
 from dataclasses import dataclass, field
+from functools import partial, reduce
 
-import pandas as pd
+import numpy as np
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from ..functions.truncate import trunc_py, trunc_udf
 from .loop import (
+    LoopResult,
+    aqe_disabled,
     graph_partitions,
     read_checkpoint,
     run_loop,
     shuffle_partitions_pinned,
+    write_checkpoint,
 )
+
+# Transition tables with at most this many rows run in one task
+# (module docstring, "Physical design").
+IN_TASK_MAX_EDGES = 200_000
 
 
 @dataclass
@@ -140,7 +167,10 @@ class PageRankResult:
     n_vertices: int
     n_edges: int
     error_history: list[float] = field(default_factory=list)
-    iter_secs: list[float] = field(default_factory=list)  # per materialization
+    # per materialization on the distributed path, per iteration in-task
+    iter_secs: list[float] = field(default_factory=list)
+    # the loop stopped because the diff fell below tol (never, for tol <= 0)
+    converged: bool = False
 
 
 def collapse(edges: DataFrame) -> DataFrame:
@@ -168,115 +198,95 @@ def prepare_graph(
     queries but is pinned off in loops).
     """
     spark = edges.sparkSession
+    # AQE would plan each of the small exchanges below as its own job
+    # (21 jobs instead of 5 on a 20k-edge graph)
+    with aqe_disabled(spark):
+        e = collapse(edges)
+        e0 = None
+        mx = None
+        if num_partitions is None:
+            e0 = e.persist()
+            # ONE pass for the partition-sizing count AND (reference mode)
+            # the max-vid scan — these were two sequential driver jobs over
+            # the same cached table (round-6 job-count trim; the daily
+            # lifecycle pays this prepare once per day and once per
+            # alone-symbol)
+            aggs = [F.count(F.lit(1)).alias("cnt")]
+            if add_virtual:
+                aggs.append(F.greatest(F.max("src"), F.max("dst")).alias("m"))
+            row = e0.agg(*aggs).first()
+            p = graph_partitions(spark, row["cnt"])
+            if add_virtual:
+                mx = row["m"]
+            e = e0
+        else:
+            p = num_partitions
+            if add_virtual:
+                mx = e.agg(
+                    F.greatest(F.max("src"), F.max("dst")).alias("m")
+                ).first()["m"]
+        # in-strength is needed for the virtual node and the +add bonus
+        # (reference mode only) — skip the extra full pass otherwise.
+        in_strength = None
+        virtual_vid = None
+        if add_virtual:
+            in_strength = (
+                e.groupBy("dst").agg(F.sum("weight").alias("in_w"))
+                .withColumnRenamed("dst", "vid")
+                .persist()
+            )
+            # virtual node = max(vid)+1 with bidirectional edges weighted
+            # in_strength/10 (network_util.py:544-564); nodes with zero
+            # in-strength get none (see oracle.py docstring).
+            virtual_vid = int(mx) + 1
+            ve = in_strength.filter(F.col("in_w") > 0).select(
+                F.col("vid"), (F.col("in_w") / 10.0).alias("weight")
+            )
+            v_out = ve.select(F.lit(virtual_vid).cast("long").alias("src"),
+                              F.col("vid").alias("dst"), "weight")
+            v_in = ve.select(F.col("vid").alias("src"),
+                             F.lit(virtual_vid).cast("long").alias("dst"), "weight")
+            e = e.unionByName(v_out).unionByName(v_in)
 
-    e = collapse(edges)
-    e0 = None
-    mx = None
-    if num_partitions is None:
-        e0 = e.persist()
-        # ONE pass for the partition-sizing count AND (reference mode)
-        # the max-vid scan — these were two sequential driver jobs over
-        # the same cached table (round-6 job-count trim; the daily
-        # lifecycle pays this prepare once per day and once per
-        # alone-symbol)
-        aggs = [F.count(F.lit(1)).alias("cnt")]
-        if add_virtual:
-            aggs.append(F.greatest(F.max("src"), F.max("dst")).alias("m"))
-        row = e0.agg(*aggs).first()
-        p = graph_partitions(spark, row["cnt"])
-        if add_virtual:
-            mx = row["m"]
-        e = e0
-    else:
-        p = num_partitions
-        if add_virtual:
-            mx = e.agg(
-                F.greatest(F.max("src"), F.max("dst")).alias("m")
-            ).first()["m"]
-    # in-strength is needed for the virtual node and the +add bonus
-    # (reference mode only) — skip the extra full pass otherwise.
-    in_strength = None
-    virtual_vid = None
-    if add_virtual:
-        in_strength = (
-            e.groupBy("dst").agg(F.sum("weight").alias("in_w"))
-            .withColumnRenamed("dst", "vid")
+        # One shuffle lays e out by src; out-sums and the row-normalized
+        # trans table then reuse that partitioning (no further exchanges —
+        # groupBy("src") and join("src") are satisfied by the persisted
+        # HashPartitioning(src, p)).
+        e = e.repartition(p, "src").persist()
+        out_sum = e.groupBy("src").agg(F.sum("weight").alias("out_w"))
+        trans = (
+            e.join(out_sum, "src")
+            .select("src", "dst", (F.col("weight") / F.col("out_w")).alias("p"))
             .persist()
         )
-        # virtual node = max(vid)+1 with bidirectional edges weighted
-        # in_strength/10 (network_util.py:544-564); nodes with zero
-        # in-strength get none (see oracle.py docstring).
-        virtual_vid = int(mx) + 1
-        ve = in_strength.filter(F.col("in_w") > 0).select(
-            F.col("vid"), (F.col("in_w") / 10.0).alias("weight")
+        n_edges = trans.count()  # materialize
+        # vertex set from the two ALREADY-AGGREGATED sides (distinct srcs =
+        # out_sum keys; distinct dsts one groupBy away) — never a distinct
+        # over the raw 2x|E| union.
+        dst_set = e.groupBy("dst").agg(F.lit(1)).select(F.col("dst").alias("vid"))
+        src_set = out_sum.select(F.col("src").alias("vid"))
+        vertices = src_set.unionByName(dst_set).distinct().persist()
+        dangling = vertices.join(
+            out_sum.withColumnRenamed("src", "vid"), "vid", "left_anti"
+        ).persist()
+        # ONE fused job counts vertices and probes the dangling set (was a
+        # vertices.count plus a dangling.limit(1).count barrier); both
+        # persists materialize inside it
+        counts = dict(
+            vertices.select(F.lit("v").alias("k"))
+            .unionByName(dangling.select(F.lit("d").alias("k")))
+            .groupBy("k").count().collect()
         )
-        v_out = ve.select(F.lit(virtual_vid).cast("long").alias("src"),
-                          F.col("vid").alias("dst"), "weight")
-        v_in = ve.select(F.col("vid").alias("src"),
-                         F.lit(virtual_vid).cast("long").alias("dst"), "weight")
-        e = e.unionByName(v_out).unionByName(v_in)
-
-    # One shuffle lays e out by src; out-sums and the row-normalized
-    # trans table then reuse that partitioning (no further exchanges —
-    # groupBy("src") and join("src") are satisfied by the persisted
-    # HashPartitioning(src, p)).
-    e = e.repartition(p, "src").persist()
-    out_sum = e.groupBy("src").agg(F.sum("weight").alias("out_w"))
-    trans = (
-        e.join(out_sum, "src")
-        .select("src", "dst", (F.col("weight") / F.col("out_w")).alias("p"))
-        .persist()
-    )
-    n_edges = trans.count()  # materialize
-    # vertex set from the two ALREADY-AGGREGATED sides (distinct srcs =
-    # out_sum keys; distinct dsts one groupBy away) — never a distinct
-    # over the raw 2x|E| union.
-    dst_set = e.groupBy("dst").agg(F.lit(1)).select(F.col("dst").alias("vid"))
-    src_set = out_sum.select(F.col("src").alias("vid"))
-    vertices = src_set.unionByName(dst_set).distinct().persist()
-    dangling = vertices.join(
-        out_sum.withColumnRenamed("src", "vid"), "vid", "left_anti"
-    ).persist()
-    # ONE fused job counts vertices and probes the dangling set (was a
-    # vertices.count plus a dangling.limit(1).count barrier); both
-    # persists materialize inside it
-    counts = dict(
-        vertices.select(F.lit("v").alias("k"))
-        .unionByName(dangling.select(F.lit("d").alias("k")))
-        .groupBy("k").count().collect()
-    )
-    n = int(counts.get("v", 0))
-    has_dangling = bool(counts.get("d", 0))
-    e.unpersist()
-    if e0 is not None:
-        e0.unpersist()
-    return GraphContext(trans, vertices, dangling, in_strength, n, n_edges,
-                        has_dangling, virtual_vid, partitions=p)
+        n = int(counts.get("v", 0))
+        has_dangling = bool(counts.get("d", 0))
+        e.unpersist()
+        if e0 is not None:
+            e0.unpersist()
+        return GraphContext(trans, vertices, dangling, in_strength, n, n_edges,
+                            has_dangling, virtual_vid, partitions=p)
 
 
-def _arrow_partial_agg(joined: DataFrame) -> DataFrame:
-    """Per-partition CSR-style gather-scatter (vectorized Arrow kernel).
-
-    Input rows (dst, c = p*rank); output one partial sum per distinct dst
-    per Arrow batch — np.unique dictionary-encodes dst (the CSR index),
-    np.add.at scatters contributions. Replaces
-    network_util.py:593-645's scipy CSR multiply at partition scope.
-    """
-    import numpy as np
-
-    def partial(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            d = b["dst"].to_numpy()
-            c = b["c"].to_numpy()
-            u, inv = np.unique(d, return_inverse=True)
-            s = np.zeros(len(u))
-            np.add.at(s, inv, c)
-            yield pd.DataFrame({"dst": u, "c": s})
-
-    return joined.mapInPandas(partial, "dst long, c double")
-
-
-def _messages(ctx: GraphContext, ranks: DataFrame, kernel: str,
+def _messages(ctx: GraphContext, ranks: DataFrame,
               salt: int | None) -> DataFrame:
     """Per-edge rank contributions (dst, c), optionally pre-aggregated.
 
@@ -288,8 +298,8 @@ def _messages(ctx: GraphContext, ranks: DataFrame, kernel: str,
     per-iteration re-sort a sort-merge join would do to the edge table.
     """
     rank_side = ranks.withColumnRenamed("vid", "src")
-    # Always hash-join (round-6 A/B, tools/exp_headline.py): the r05
-    # code broadcast rank vectors under 200k vids, but a chunked loop
+    # Always hash-join (round-6 A/B): the r05 code broadcast rank
+    # vectors under 200k vids, but a chunked loop
     # then pays `chunk` driver-side broadcast builds per materialization
     # — the headline graph (150k vids) ran 1.36x faster steady-state
     # with the hint (1.44s -> 1.06s per 3-iter chunk). The hash join is
@@ -302,8 +312,6 @@ def _messages(ctx: GraphContext, ranks: DataFrame, kernel: str,
     joined = ctx.trans.join(rank_side, "src").select(
         "dst", (F.col("p") * F.col("rank")).alias("c")
     )
-    if kernel == "arrow":
-        joined = _arrow_partial_agg(joined)
     if salt:
         # explicit two-stage aggregation for hub-dst skew: partial per
         # (dst, salt bucket keyed on the producing partition), then final
@@ -324,7 +332,6 @@ def pagerank(
     max_iter: int = 1000,
     tol: float = 1e-9,
     num_partitions: int | None = None,
-    kernel: str = "sql",
     salt: int | None = None,
     checkpoint_dir: str | None = None,
     checkpoint_every: int = 20,
@@ -339,16 +346,18 @@ def pagerank(
     Returns ranks over the ORIGINAL vertices (virtual node removed and
     post-pass applied in reference mode). Resumable: if
     ``checkpoint_dir`` holds a manifest and ``resume``, the loop
-    continues from the checkpointed iteration.
+    continues from the checkpointed iteration. ``salt``, ``chunk``,
+    ``metric_every`` and ``checkpoint_every`` apply only to graphs
+    above ``IN_TASK_MAX_EDGES`` (module docstring).
 
     ``trunc_digits=14`` runs the reference's exact per-iteration
     truncation regime (network_util.py:604,624-645) for byte-parity
     work — SLOW path (a pandas-UDF truncation per aggregate), kept out
-    of the default float64 hot loop; only ``kernel='sql'`` without
-    ``salt`` (anything else raises). See oracle.reference_pagerank for
+    of the default float64 hot loop; ``salt`` with it raises. See
+    oracle.reference_pagerank for
     the regime and the documented post-pass deviation. Byte parity vs
-    the NumPy oracle is BEST-EFFORT at truncation boundaries: the
-    distributed F.sum's addition order differs from NumPy's, so when a
+    the NumPy oracle is BEST-EFFORT at truncation boundaries: both
+    paths' addition order differs from NumPy's, so when a
     true sum lies within ~1e-16 of a 1e-14 grid line the 14th fraction
     digit can flip with partition count/order (gated in
     tests/test_trunc_mode.py on fixtures away from boundaries). The
@@ -369,8 +378,8 @@ def pagerank(
     t0 = time.time()
     ctx = prepare_graph(edges, num_partitions, add_virtual=(mode == "reference"))
     res = pagerank_on_context(
-        ctx, mode=mode, alpha=alpha, max_iter=max_iter, tol=tol, kernel=kernel,
-        salt=salt, checkpoint_dir=checkpoint_dir, checkpoint_every=checkpoint_every,
+        ctx, mode=mode, alpha=alpha, max_iter=max_iter, tol=tol, salt=salt,
+        checkpoint_dir=checkpoint_dir, checkpoint_every=checkpoint_every,
         resume=resume, chunk=chunk, metric_every=metric_every, unpersist=True,
         trunc_digits=trunc_digits, init_ranks=init_ranks,
     )
@@ -384,7 +393,6 @@ def pagerank_on_context(
     alpha: float | None = None,
     max_iter: int = 1000,
     tol: float = 1e-9,
-    kernel: str = "sql",
     salt: int | None = None,
     checkpoint_dir: str | None = None,
     checkpoint_every: int = 20,
@@ -397,30 +405,72 @@ def pagerank_on_context(
 ) -> PageRankResult:
     """Iterate + post-pass over an already-prepared GraphContext (used
     directly by the scaling bench so every parallelism level runs the
-    loop over byte-identical prepared inputs)."""
+    loop over byte-identical prepared inputs). Transition tables of at
+    most ``IN_TASK_MAX_EDGES`` rows run in one task, larger ones in the
+    distributed loop (module docstring)."""
     spark = ctx.trans.sparkSession
     a = alpha if alpha is not None else (1.0 if mode == "reference" else 0.85)
     t0 = time.time()
+    if ctx.n == 0:
+        raise ValueError("PageRank of a graph with no vertices")
+    if trunc_digits and salt:
+        # the trunc step is its own matvec (it never routes through
+        # _messages), so salt would be silently ignored — refuse instead
+        # of running an unsalted loop the caller didn't ask for
+        raise ValueError(
+            "trunc_digits is only implemented without salt; the "
+            "byte-parity step bypasses _messages"
+        )
+    # a checkpoint resumes only onto the graph and settings it was written for
+    run_key = {"mode": mode, "alpha": a, "n_vertices": ctx.n,
+               "n_edges": ctx.n_edges}
+    start_iter = 0
+    resumed = None
+    if checkpoint_dir and resume:
+        cp = read_checkpoint(spark, checkpoint_dir, expect=run_key)
+        if cp is not None:
+            resumed = cp[0].select("vid", "rank", "diff")
+            start_iter = cp[1]["iteration"]
+    extra = {**run_key, "tol": tol}
+
+    if ctx.n_edges <= IN_TASK_MAX_EDGES:
+        out, res = _in_task(ctx, mode, a, tol, max_iter, start_iter, resumed,
+                            init_ranks, trunc_digits, checkpoint_dir, extra)
+    else:
+        out, res = _distributed(
+            ctx, mode, a, tol, max_iter, start_iter, resumed, init_ranks,
+            trunc_digits, salt, chunk, metric_every, checkpoint_dir,
+            checkpoint_every, extra)
+
+    if unpersist:
+        for df in (ctx.trans, ctx.vertices, ctx.dangling, ctx.in_strength):
+            if df is not None:
+                df.unpersist()
+    return PageRankResult(out, res.iterations, res.metric, time.time() - t0,
+                          res.wall_secs, ctx.n, ctx.n_edges, res.metric_history,
+                          res.chunk_secs, converged=res.metric < tol)
+
+
+def _distributed(
+    ctx: GraphContext, mode: str, a: float, tol: float, max_iter: int,
+    start_iter: int, ranks: DataFrame | None, init_ranks: DataFrame | None,
+    trunc_digits: int | None, salt: int | None, chunk: int,
+    metric_every: int, checkpoint_dir: str | None, checkpoint_every: int,
+    extra: dict,
+) -> tuple[DataFrame, LoopResult]:
+    """The loop as Spark jobs (graph/loop.py run_loop), one or more per
+    iteration; ``ranks`` is the resumed state, if any. Returns the final
+    ranks and the loop's record."""
+    spark = ctx.trans.sparkSession
     n = ctx.n
     uniform = 1.0 / n
 
     trans = ctx.trans
     t_dangling, t_has_dangling = ctx.dangling, ctx.has_dangling
     if trunc_digits:
-        if kernel != "sql" or salt:
-            # the trunc step is its own matvec (it never routes through
-            # _messages), so kernel/salt would be silently ignored —
-            # refuse instead of running an unsalted/non-arrow loop the
-            # caller didn't ask for
-            raise ValueError(
-                "trunc_digits is only implemented for kernel='sql' "
-                "without salt; the byte-parity step bypasses _messages"
-            )
         # byte-parity regime: transition entries truncated ONCE
         # (network_util.py:604) — projection is narrow, so the persisted
         # hash(src) layout carries through
-        from ..functions.truncate import trunc_py, trunc_udf
-
         _tr = trunc_udf(trunc_digits)
         trans = trans.select(
             "src", "dst", _tr(F.col("p")).alias("p")).persist()
@@ -439,14 +489,6 @@ def pagerank_on_context(
         ).persist()
         t_has_dangling = t_dangling.limit(1).count() > 0
 
-    start_iter = 0
-    ranks = None
-    if checkpoint_dir and resume:
-        cp = read_checkpoint(spark, checkpoint_dir)
-        if cp is not None:
-            ranks, manifest = cp
-            ranks = ranks.select("vid", "rank", "diff")
-            start_iter = manifest["iteration"]
     if ranks is None and init_ranks is not None:
         # warm start (checkpoint resume wins if both are present): seed
         # vids unknown to this graph are dropped by the left join's
@@ -485,7 +527,7 @@ def pagerank_on_context(
         # attached via crossJoin (broadcast of one row), never a
         # .collect().
         cur = state.select("vid", "rank")
-        msgs = _messages(ctx, cur, kernel, salt).select(
+        msgs = _messages(ctx, cur, salt).select(
             F.col("dst").alias("vid"), "c", F.lit(0.0).alias("pv")
         )
         prev = cur.select("vid", F.lit(0.0).alias("c"), F.col("rank").alias("pv"))
@@ -558,8 +600,7 @@ def pagerank_on_context(
             spark, ranks, step, metric, tol, max_iter,
             checkpoint_dir=checkpoint_dir, checkpoint_every=checkpoint_every,
             start_iteration=start_iter, chunk=chunk, metric_every=metric_every,
-            checkpoint_extra={"mode": mode, "alpha": a, "tol": tol,
-                              "n_vertices": n, "n_edges": ctx.n_edges},
+            checkpoint_extra=extra,
         )
     out = res.state.select("vid", "rank")
 
@@ -571,17 +612,167 @@ def pagerank_on_context(
         # way back to the source edge extraction once ctx was
         # unpersisted below (round-6 plan audit).
         out = _reference_postpass(out, ctx).localCheckpoint(eager=True)
-
-    if unpersist:
-        for df in (ctx.trans, ctx.vertices, ctx.dangling, ctx.in_strength):
-            if df is not None:
-                df.unpersist()
     if trunc_digits:
         trans.unpersist()
         t_dangling.unpersist()
-    return PageRankResult(out, res.iterations, res.metric, time.time() - t0,
-                          res.wall_secs, n, ctx.n_edges, res.metric_history,
-                          res.chunk_secs)
+    return out, res
+
+
+# Tagged-union row kinds: into the in-task kernel (tag, a, b, x) ...
+_TRANS, _VERTEX, _IN_W, _SEED = 0, 1, 2, 3
+# ... and out of it. _ITER rows carry one iteration each: vid = the
+# iteration number, diff = its max diff, secs = its seconds in the task.
+_RANK, _STATE, _ITER = 0, 1, 2
+_IN_TASK_OUT = "tag int, vid long, rank double, diff double, secs double"
+
+
+def _tagged(df: DataFrame, tag: int, a: str, b: str | None = None,
+            x: str | None = None) -> DataFrame:
+    # literal fillers, never nulls: an int64 column with nulls comes out
+    # of Arrow as float64, which cannot hold 64-bit hashed vids exactly
+    return df.select(
+        F.lit(tag).alias("tag"),
+        F.col(a).cast("long").alias("a"),
+        (F.col(b).cast("long") if b else F.lit(0).cast("long")).alias("b"),
+        (F.col(x).cast("double") if x else F.lit(0.0)).alias("x"),
+    )
+
+
+def _in_task(
+    ctx: GraphContext, mode: str, a: float, tol: float, max_iter: int,
+    start_iter: int, resumed: DataFrame | None, init_ranks: DataFrame | None,
+    trunc_digits: int | None, checkpoint_dir: str | None, extra: dict,
+) -> tuple[DataFrame, LoopResult]:
+    """The whole loop, and the reference post-pass, in one ``mapInArrow``
+    task; one Spark job, plus two when ``checkpoint_dir`` is set.
+    Returns the final ranks and a loop record shaped like the
+    distributed loop's, with one history entry per iteration."""
+    spark = ctx.trans.sparkSession
+    seed = resumed if resumed is not None else init_ranks
+    parts = [_tagged(ctx.trans, _TRANS, "src", "dst", "p"),
+             _tagged(ctx.vertices, _VERTEX, "vid")]
+    if mode == "reference":
+        parts.append(_tagged(ctx.in_strength, _IN_W, "vid", x="in_w"))
+    if seed is not None:
+        parts.append(_tagged(seed, _SEED, "vid", x="rank"))
+    kernel = _in_task_kernel(
+        a, tol, max_iter, start_iter, trunc_digits,
+        warm=resumed is None and init_ranks is not None,
+        virtual_vid=ctx.virtual_vid if mode == "reference" else None)
+
+    t0 = time.time()
+    with aqe_disabled(spark):
+        out = (reduce(DataFrame.unionByName, parts).coalesce(1)
+               .mapInArrow(kernel, _IN_TASK_OUT).localCheckpoint(eager=False))
+        # the one job: runs the kernel and keeps its output as the checkpoint
+        hist = sorted(out.filter(F.col("tag") == _ITER)
+                      .select("vid", "diff", "secs").collect())
+    state = out.filter(F.col("tag") == _STATE).select("vid", "rank", "diff")
+    errs = [h["diff"] for h in hist]
+    iterations = start_iter + len(hist)
+    metric = errs[-1] if errs else float("inf")
+    if checkpoint_dir:
+        write_checkpoint(state, checkpoint_dir, iterations, metric, "vid", extra)
+    res = LoopResult(state, iterations, metric, time.time() - t0, errs,
+                     [h["secs"] for h in hist])
+    ranks = out.filter(F.col("tag") == _RANK) if mode == "reference" else state
+    return ranks.select("vid", "rank"), res
+
+
+def _in_task_kernel(a: float, tol: float, max_iter: int, start_iter: int,
+                    trunc_digits: int | None, warm: bool,
+                    virtual_vid: int | None):
+    """The ``mapInArrow`` function for ``_in_task``: the same arithmetic,
+    in the same order, as the distributed step and post-pass, with
+    per-vertex sums as ``np.bincount`` scatters over a vertex index
+    built once.
+
+    The function travels to the Python worker by value. Outside trunc
+    mode it references nothing of this package, so workers need only
+    NumPy and PyArrow, as the distributed loop needs no Python at all."""
+    trunc = partial(trunc_py, count=trunc_digits) if trunc_digits else None
+
+    def rows(tag: int, vid, rank=None, diff=None, secs=None) -> pa.RecordBatch:
+        # one _IN_TASK_OUT batch; missing columns are zeros
+        k = len(vid)
+        cols = [np.full(k, tag, np.int32), np.asarray(vid, np.int64)] + [
+            np.zeros(k) if c is None else np.asarray(c, np.float64)
+            for c in (rank, diff, secs)]
+        return pa.RecordBatch.from_arrays(
+            [pa.array(c) for c in cols],
+            names=["tag", "vid", "rank", "diff", "secs"])
+
+    def kernel(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        def tr(v):
+            return np.array([trunc(f) for f in v.tolist()])
+
+        t = pa.Table.from_batches(list(batches))
+        tag, ka, kb, val = (t.column(c).to_numpy() for c in ("tag", "a", "b", "x"))
+        vids = np.sort(ka[tag == _VERTEX])
+        n = len(vids)
+        uniform = 1.0 / n
+        e = tag == _TRANS
+        src = np.searchsorted(vids, ka[e])
+        dst = np.searchsorted(vids, kb[e])
+        p = tr(val[e]) if trunc_digits else val[e]
+        # in trunc mode a vertex whose every out-probability truncated to
+        # zero is dangling, as in the distributed path
+        has_out = np.zeros(n, dtype=bool)
+        has_out[src[p != 0.0] if trunc_digits else src] = True
+        dangling = np.flatnonzero(~has_out)
+
+        x = np.full(n, uniform)
+        s = tag == _SEED
+        sv, sr = ka[s], val[s]
+        if warm:  # one seed per vid, the largest, as the distributed path
+            o = np.lexsort((sr, sv))
+            sv, sr = sv[o], sr[o]
+            last = np.append(sv[1:] != sv[:-1], True)
+            sv, sr = sv[last], sr[last]
+        i = np.minimum(np.searchsorted(vids, sv), n - 1)
+        known = vids[i] == sv  # seeds for vids not in this graph drop out
+        x[i[known]] = sr[known]
+        if warm:
+            x = x / x.sum()
+
+        if trunc_digits:
+            s3 = trunc(trunc(1.0 - a) / n)
+        diff = np.ones(n)
+        errs: list[float] = []
+        secs: list[float] = []
+        it = start_iter
+        while it < max_iter:
+            tc = time.perf_counter()
+            dmass = x[dangling].sum()
+            if trunc_digits:
+                c = tr(np.bincount(dst, weights=p * tr(a * x)[src], minlength=n))
+                new = tr(c + trunc(uniform * (a * dmass)) + s3)
+            else:
+                c = np.bincount(dst, weights=p * x[src], minlength=n)
+                new = a * c + (a * dmass * uniform + (1.0 - a) * uniform)
+            diff = np.abs(new - x)
+            x = new
+            it += 1
+            errs.append(float(diff.max()))
+            secs.append(time.perf_counter() - tc)
+            if errs[-1] < tol:
+                break
+
+        yield rows(_STATE, vids, x, diff)
+        yield rows(_ITER, np.arange(start_iter + 1, it + 1),
+                   diff=np.array(errs), secs=np.array(secs))
+        if virtual_vid is not None:
+            # the reference post-pass, as _reference_postpass
+            is_v = vids == virtual_vid
+            w = np.zeros(n)
+            iw = tag == _IN_W
+            w[np.searchsorted(vids, ka[iw])] = val[iw]
+            r = x[~is_v] / (1.0 - x[is_v].sum())
+            r = r / r.sum()
+            r = r + 0.5 * w[~is_v] / val[iw].sum()
+            yield rows(_RANK, vids[~is_v], r / r.sum())
+
+    return kernel
 
 
 def _reference_postpass(ranks: DataFrame, ctx: GraphContext) -> DataFrame:

@@ -17,6 +17,15 @@ def spark() -> SparkSession:
     yield s
 
 
+@pytest.fixture
+def distributed_pagerank(monkeypatch):
+    """Force PageRank onto the distributed loop: test graphs are far
+    below ``IN_TASK_MAX_EDGES`` and would otherwise run in one task."""
+    import pagerank_service_spark.graph.pagerank as pr
+
+    monkeypatch.setattr(pr, "IN_TASK_MAX_EDGES", 0)
+
+
 def edges_df(spark, triples):
     return spark.createDataFrame(
         [(int(s), int(d), float(w)) for s, d, w in triples],

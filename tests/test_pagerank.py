@@ -68,17 +68,15 @@ def test_standard_matches_networkx(spark):
     _assert_allclose(res.ranks, want)
 
 
-def test_arrow_kernel_and_salt_equal_sql(spark):
+def test_salt_equals_unsalted(spark):
     triples = fixture_edges("star_hub")
     kw = dict(mode="reference", tol=1e-9, max_iter=8)
     base = pr.pagerank(edges_df(spark, triples), **kw)
-    arrow = pr.pagerank(edges_df(spark, triples), kernel="arrow", **kw)
     salted = pr.pagerank(edges_df(spark, triples), salt=4, **kw)
     b = {r["vid"]: r["rank"] for r in base.ranks.collect()}
-    for other in (arrow, salted):
-        o = {r["vid"]: r["rank"] for r in other.ranks.collect()}
-        for k in b:
-            assert abs(b[k] - o[k]) < 1e-12
+    o = {r["vid"]: r["rank"] for r in salted.ranks.collect()}
+    for k in b:
+        assert abs(b[k] - o[k]) < 1e-12
 
 
 def test_salted_hub_10k_matches_and_is_two_stage(spark):
@@ -104,7 +102,7 @@ def test_salted_hub_10k_matches_and_is_two_stage(spark):
 
     ctx = pr.prepare_graph(e, add_virtual=False)
     ranks = ctx.vertices.select("vid", F.lit(1.0 / ctx.n).alias("rank"))
-    msg = pr._messages(ctx, ranks, "sql", salt=8)
+    msg = pr._messages(ctx, ranks, salt=8)
     plan = msg._jdf.queryExecution().executedPlan().toString()
     assert "spark_partition_id" in plan.lower(), plan
     for df in (ctx.trans, ctx.vertices, ctx.dangling):
@@ -148,6 +146,56 @@ def test_checkpoint_resume(spark, tmp_path):
         manifest = json.load(fh)
     assert manifest["iteration"] == resumed.iterations
     assert manifest["partitions"] and all("rows" in p for p in manifest["partitions"])
+
+
+def test_foreign_checkpoint_is_refused(spark, tmp_path):
+    """A checkpoint resumes only onto the graph, mode and alpha it was
+    written for; anything else raises instead of continuing from
+    foreign ranks."""
+    cp = str(tmp_path / "cp")
+    a = edges_df(spark, fixture_edges("chain10"))
+    pr.pagerank(a, mode="reference", tol=0.0, max_iter=3, checkpoint_dir=cp)
+    with pytest.raises(ValueError, match="different run"):
+        pr.pagerank(edges_df(spark, fixture_edges("two_cliques_bridge")),
+                    mode="reference", tol=1e-9, checkpoint_dir=cp)
+    with pytest.raises(ValueError, match="different run"):
+        pr.pagerank(a, mode="reference", alpha=0.9, tol=1e-9,
+                    checkpoint_dir=cp)
+    # resume=False ignores the manifest and starts over
+    assert pr.pagerank(a, mode="standard", tol=0.0, max_iter=2,
+                       checkpoint_dir=cp, resume=False).iterations == 2
+
+
+def test_converged_flag(spark):
+    """converged is set only when the diff fell below tol; a loop cut
+    at max_iter, and a fixed-iteration run (tol=0), report False."""
+    e = edges_df(spark, fixture_edges("chain10"))
+    kw = dict(mode="reference")
+    assert pr.pagerank(e, tol=1e-9, max_iter=1000, **kw).converged
+    assert not pr.pagerank(e, tol=1e-9, max_iter=3, **kw).converged
+    assert not pr.pagerank(e, tol=0.0, max_iter=3, **kw).converged
+
+
+def test_cli_pagerank_reports_convergence(spark, tmp_path, capsys):
+    """The CLI prints ``converged`` and exits nonzero when tol > 0 and
+    the loop stopped at --max-iter."""
+    import json
+
+    from pagerank_service_spark import cli
+
+    edges = str(tmp_path / "edges")
+    edges_df(spark, fixture_edges("bipair")).write.parquet(edges)
+    base = ["--shuffle-partitions", "4", "pagerank", "--edges", edges,
+            "--tol", "1e-9"]
+
+    def run(*extra):
+        code = cli.main(base + list(extra))
+        return code, json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+
+    code, out = run("--output", str(tmp_path / "a"), "--max-iter", "2")
+    assert (code, out["converged"]) == (1, False)
+    code, out = run("--output", str(tmp_path / "b"))
+    assert (code, out["converged"]) == (0, True)
 
 
 def test_chunked_loop_equals_unchunked(spark):

@@ -66,16 +66,13 @@ def test_trunc14_reference_mode_matches_oracle(spark):
     np.testing.assert_allclose(g, w, atol=1e-12, rtol=0)
 
 
-def test_trunc14_rejects_kernel_and_salt(spark):
-    """trunc_digits bypasses _messages, so kernel='arrow' / salt would
-    be silently ignored — the combination must raise (advisor round-4),
-    never run an unsalted/non-arrow loop the caller didn't ask for."""
+def test_trunc14_rejects_salt(spark):
+    """trunc_digits bypasses _messages, so salt would be silently
+    ignored — the combination must raise (advisor round-4), never run
+    an unsalted loop the caller didn't ask for."""
     import pytest
 
     triples = fixture_edges("chain10")
-    with pytest.raises(ValueError, match="trunc_digits"):
-        pr.pagerank(edges_df(spark, triples), mode="standard", tol=0.0,
-                    max_iter=2, trunc_digits=14, kernel="arrow")
     with pytest.raises(ValueError, match="trunc_digits"):
         pr.pagerank(edges_df(spark, triples), mode="standard", tol=0.0,
                     max_iter=2, trunc_digits=14, salt=8)
