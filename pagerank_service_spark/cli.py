@@ -175,13 +175,20 @@ def main(argv: list[str] | None = None) -> int:
 
         res = connected_components(edges)
         res.components.write.mode("overwrite").parquet(args.output)
-        print(json.dumps({"iterations": res.iterations}))
+        print(json.dumps({"iterations": res.iterations,
+                          "converged": res.converged}))
+        if not res.converged:
+            # the labels are written, but they are not the fixpoint
+            return 1
     elif args.cmd == "labelprop":
         from .graph.labelprop import label_propagation
 
         res = label_propagation(edges)
         res.labels.write.mode("overwrite").parquet(args.output)
-        print(json.dumps({"iterations": res.iterations}))
+        print(json.dumps({"iterations": res.iterations,
+                          "converged": res.converged}))
+        if not res.converged:
+            return 1
     elif args.cmd == "triangles":
         from .graph.triangles import triangle_counts
 

@@ -41,19 +41,23 @@ def bfs_distances_from(
     batch feeder uses (e.g. one root per new contract pair for the day:
     the roots never pass through the driver).
 
-    ``assume_distinct=True`` (directed only) declares the input already
+    ``assume_distinct=True`` (directed only; ``ValueError`` with
+    ``directed=False``) declares the input already
     holds unique (src, dst) rows from a materialized source — e.g. the
     checkpointed adjacency ``prepare_state_graph`` returns — and skips
     the dedup shuffle plus its cache layer (round-6 job-budget trim;
     the sizing count over a checkpointed input is a cheap cached
     scan)."""
+    if assume_distinct and not directed:
+        # the reversed copy can duplicate rows, so the dedup must run
+        raise ValueError("assume_distinct=True requires directed=True")
     spark = edges.sparkSession
     adj = edges.select("src", "dst")
     if not directed:
         adj = adj.unionByName(
             edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
         )
-    dedup = not (directed and assume_distinct)
+    dedup = not assume_distinct
     if dedup:
         adj = adj.distinct().persist()
     p = graph_partitions(spark, adj.count())

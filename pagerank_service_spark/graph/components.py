@@ -14,14 +14,28 @@ label <- label(label)) each round, which contracts long chains
 logarithmically — the DataFrame rendition of large-star/small-star's
 convergence behavior with simpler plans. Edge table is symmetrized and
 persisted once; per-round cost is two hash joins on vid.
+
+Physical design. An edge table of at most ``in_task.IN_TASK_MAX_EDGES``
+rows (one ``count()`` decides) runs every round in one task
+(graph/in_task.py) as NumPy over a vertex index built once: a round is
+``np.minimum.at`` over the symmetrized edges, then the pointer jump.
+Labels are held as vertex indices, whose order is the vids' order, so
+the rounds, the stop and the labels are the distributed loop's. That is
+one Spark job for the whole run, where the loop pays one per round.
+``num_partitions`` and ``assume_symmetric`` tune only the distributed
+loop, which runs above the threshold. ``connected_components_star``
+always runs distributed.
 """
 
 from __future__ import annotations
 
+import time
 from dataclasses import dataclass
 
+import numpy as np
 from pyspark.sql import DataFrame, functions as F
 
+from . import in_task
 from .loop import graph_partitions, run_loop, shuffle_partitions_pinned
 
 
@@ -47,6 +61,8 @@ def connected_components(
     symmetrized table maintained at write time) and skips the
     symmetrizing union+distinct — the one full-edge-table shuffle
     outside the loop."""
+    if in_task.fits(edges):
+        return _cc_in_task(edges, max_iter)
     spark = edges.sparkSession
     if assume_symmetric:
         und0 = edges.select("src", "dst").persist()
@@ -121,6 +137,42 @@ def connected_components(
                             converged=res.metric < 1.0)
 
 
+def _cc_in_task(edges: DataFrame, max_iter: int) -> ComponentsResult:
+    t0 = time.time()
+    # record: vid = rounds run, component = 1 if the labels reached
+    # their fixpoint
+    comps, rec = in_task.run_graph(edges, _cc_kernel(max_iter),
+                                   "vid long, component long")
+    return ComponentsResult(comps, rec["vid"], time.time() - t0,
+                            converged=bool(rec["component"]))
+
+
+def _cc_kernel(max_iter: int):
+    """The in-task rounds of ``connected_components``' step: neighbor
+    min over the symmetrized edges, then ``label <- label(label)``,
+    until no label changes."""
+
+    def kernel(src, dst, x):
+        vids = np.unique(np.concatenate([src, dst]))
+        s, d = np.searchsorted(vids, src), np.searchsorted(vids, dst)
+        s, d = np.concatenate([s, d]), np.concatenate([d, s])
+        lab = np.arange(len(vids))
+        rounds, changed = 0, -1
+        while rounds < max_iter:
+            nbr = lab.copy()
+            np.minimum.at(nbr, d, lab[s])
+            new = nbr[nbr]
+            changed = int(np.count_nonzero(new != lab))
+            lab = new
+            rounds += 1
+            if changed == 0:
+                break
+        return ({"vid": vids, "component": vids[lab]},
+                {"vid": rounds, "component": int(changed == 0)})
+
+    return kernel
+
+
 def connected_components_star(
     edges: DataFrame,
     max_iter: int = 50,
@@ -155,8 +207,6 @@ def connected_components_star(
     sum must all collide); a ``max_iter`` bailout before the fixpoint
     returns partial labels with ``converged=False``.
     """
-    import time
-
     t0 = time.time()
     spark = edges.sparkSession
     # vertex universe comes from the UNFILTERED endpoints: a vertex

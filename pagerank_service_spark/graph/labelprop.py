@@ -19,14 +19,29 @@ Spark shape: join labels to the symmetrized weighted edge list,
 ``max_by`` over a struct ordered (weight desc, label asc) — one shuffle
 for the groupBy, one for the argmax, no window sort over whole
 partitions.
+
+Physical design. An edge table of at most ``in_task.IN_TASK_MAX_EDGES``
+rows (one ``count()`` decides) runs every round in one task
+(graph/in_task.py) as NumPy over a vertex index built once: the
+symmetrized weights are pre-summed per (src, dst) pair once, as in the
+distributed loop; each round sums the votes per (dst, label) with
+``np.unique`` + ``np.bincount`` and takes the argmax by ``np.lexsort``
+under the same (weight desc, label asc) rule. Labels are held as vertex
+indices, whose order is the vids' order, so the rounds, the stop and
+the labels are the distributed loop's. That is one Spark job for the
+whole run, where the loop pays one per round. ``num_partitions`` tunes
+only the distributed loop, which runs above the threshold.
 """
 
 from __future__ import annotations
 
+import time
 from dataclasses import dataclass
 
+import numpy as np
 from pyspark.sql import DataFrame, functions as F
 
+from . import in_task
 from .loop import graph_partitions, run_loop, shuffle_partitions_pinned
 
 
@@ -35,6 +50,9 @@ class LabelPropResult:
     labels: DataFrame  # (vid, label)
     iterations: int
     wall_secs: float
+    # False when max_iter elapsed while labels were still changing (a
+    # 2-cycle on bipartite structure never settles)
+    converged: bool
 
 
 def label_propagation(
@@ -42,6 +60,8 @@ def label_propagation(
     max_iter: int = 20,
     num_partitions: int | None = None,
 ) -> LabelPropResult:
+    if in_task.fits(edges):
+        return _lp_in_task(edges, max_iter)
     spark = edges.sparkSession
     und0 = (
         edges.select("src", "dst", "weight")
@@ -101,7 +121,54 @@ def label_propagation(
     und0.unpersist()
     und.unpersist()
     return LabelPropResult(res.state.select("vid", "label"),
-                           res.iterations, res.wall_secs)
+                           res.iterations, res.wall_secs,
+                           converged=res.metric < 1.0)
+
+
+def _lp_in_task(edges: DataFrame, max_iter: int) -> LabelPropResult:
+    t0 = time.time()
+    # record: vid = rounds run, label = 1 if no label changed in the
+    # last round
+    labels, rec = in_task.run_graph(edges, _lp_kernel(max_iter),
+                                    "vid long, label long", x="weight")
+    return LabelPropResult(labels, rec["vid"], time.time() - t0,
+                           converged=bool(rec["label"]))
+
+
+def _lp_kernel(max_iter: int):
+    """The in-task rounds of ``label_propagation``'s step: every vertex
+    takes the label with the largest summed vote weight among its
+    neighbors, ties to the smaller label, until no label changes."""
+
+    def kernel(src, dst, w):
+        vids = np.unique(np.concatenate([src, dst]))
+        n = len(vids)
+        s, d = np.searchsorted(vids, src), np.searchsorted(vids, dst)
+        # symmetrize, then one weight per (src, dst) pair
+        pair, inv = np.unique(np.concatenate([s * n + d, d * n + s]),
+                              return_inverse=True)
+        w = np.bincount(inv, weights=np.concatenate([w, w]))
+        s, d = pair // n, pair % n
+        lab = np.arange(n)
+        rounds, changed = 0, -1
+        while rounds < max_iter:
+            vote, inv = np.unique(d * n + lab[s], return_inverse=True)
+            vw = np.bincount(inv, weights=w)
+            vd, vl = vote // n, vote % n
+            # per dst, the first vote by (weight desc, label asc)
+            o = np.lexsort((vl, -vw, vd))
+            first = o[np.diff(vd[o], prepend=-1) != 0]
+            new = lab.copy()
+            new[vd[first]] = vl[first]
+            changed = int(np.count_nonzero(new != lab))
+            lab = new
+            rounds += 1
+            if changed == 0:
+                break
+        return ({"vid": vids, "label": vids[lab]},
+                {"vid": rounds, "label": int(changed == 0)})
+
+    return kernel
 
 
 def label_propagation_oracle(

@@ -16,22 +16,16 @@ Two semantic modes:
 Physical design. A prepared graph takes one of two paths, chosen by
 the size of its transition table:
 
-* **in one task**, when ``trans`` has at most ``IN_TASK_MAX_EDGES``
-  rows: ``trans``, the vertex set, in-strength and any resume or
-  warm-start ranks travel as one tagged union, ``coalesce(1)``'d into a
+* **in one task**, when ``trans`` has at most
+  ``in_task.IN_TASK_MAX_EDGES`` rows (graph/in_task.py has the
+  threshold and the runner): ``trans``, the vertex set, in-strength and
+  any resume or warm-start ranks travel as one tagged union into a
   single ``mapInArrow`` task. The kernel builds the vertex index once
   (``np.searchsorted`` over the sorted vids, a CSR-style gather index),
   runs each iteration as an ``np.bincount`` scatter plus the dangling
   term, checks the diff every iteration and runs the reference
   post-pass in the same task. That is one Spark job where the
-  distributed loop pays about two per iteration: at these sizes an
-  iteration's edge work is microseconds and the loop's cost is job
-  scheduling. The constant bounds what one Python worker holds (about
-  100 B of Arrow and NumPy arrays per edge) and what one core computes;
-  it is not a crossover point: one task was faster at every size
-  measured. It sits well below the 471,712 collapsed edges of the
-  benchmark's ``zipf_pagerank`` graph, so that workload keeps timing
-  the distributed loop and its scaling efficiency.
+  distributed loop pays about two per iteration.
 * **distributed**, above it. The transition table ``trans(src, dst,
   p)`` is computed ONCE (collapse multi-edges -> out-degree normalize),
   hash-repartitioned on ``src`` and persisted — the per-iteration join
@@ -56,15 +50,14 @@ graph size is refused with ``ValueError`` on both paths.
 from __future__ import annotations
 
 import time
-from collections.abc import Iterator
 from dataclasses import dataclass, field
-from functools import partial, reduce
+from functools import partial
 
 import numpy as np
-import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..functions.truncate import trunc_py, trunc_udf
+from . import in_task
 from .loop import (
     LoopResult,
     aqe_disabled,
@@ -74,10 +67,6 @@ from .loop import (
     shuffle_partitions_pinned,
     write_checkpoint,
 )
-
-# Transition tables with at most this many rows run in one task
-# (module docstring, "Physical design").
-IN_TASK_MAX_EDGES = 200_000
 
 
 @dataclass
@@ -348,7 +337,7 @@ def pagerank(
     ``checkpoint_dir`` holds a manifest and ``resume``, the loop
     continues from the checkpointed iteration. ``salt``, ``chunk``,
     ``metric_every`` and ``checkpoint_every`` apply only to graphs
-    above ``IN_TASK_MAX_EDGES`` (module docstring).
+    above ``in_task.IN_TASK_MAX_EDGES`` (module docstring).
 
     ``trunc_digits=14`` runs the reference's exact per-iteration
     truncation regime (network_util.py:604,624-645) for byte-parity
@@ -406,8 +395,8 @@ def pagerank_on_context(
     """Iterate + post-pass over an already-prepared GraphContext (used
     directly by the scaling bench so every parallelism level runs the
     loop over byte-identical prepared inputs). Transition tables of at
-    most ``IN_TASK_MAX_EDGES`` rows run in one task, larger ones in the
-    distributed loop (module docstring)."""
+    most ``in_task.IN_TASK_MAX_EDGES`` rows run in one task, larger ones
+    in the distributed loop (module docstring)."""
     spark = ctx.trans.sparkSession
     a = alpha if alpha is not None else (1.0 if mode == "reference" else 0.85)
     t0 = time.time()
@@ -433,7 +422,7 @@ def pagerank_on_context(
             start_iter = cp[1]["iteration"]
     extra = {**run_key, "tol": tol}
 
-    if ctx.n_edges <= IN_TASK_MAX_EDGES:
+    if ctx.n_edges <= in_task.IN_TASK_MAX_EDGES:
         out, res = _in_task(ctx, mode, a, tol, max_iter, start_iter, resumed,
                             init_ranks, trunc_digits, checkpoint_dir, extra)
     else:
@@ -626,47 +615,32 @@ _RANK, _STATE, _ITER = 0, 1, 2
 _IN_TASK_OUT = "tag int, vid long, rank double, diff double, secs double"
 
 
-def _tagged(df: DataFrame, tag: int, a: str, b: str | None = None,
-            x: str | None = None) -> DataFrame:
-    # literal fillers, never nulls: an int64 column with nulls comes out
-    # of Arrow as float64, which cannot hold 64-bit hashed vids exactly
-    return df.select(
-        F.lit(tag).alias("tag"),
-        F.col(a).cast("long").alias("a"),
-        (F.col(b).cast("long") if b else F.lit(0).cast("long")).alias("b"),
-        (F.col(x).cast("double") if x else F.lit(0.0)).alias("x"),
-    )
-
-
 def _in_task(
     ctx: GraphContext, mode: str, a: float, tol: float, max_iter: int,
     start_iter: int, resumed: DataFrame | None, init_ranks: DataFrame | None,
     trunc_digits: int | None, checkpoint_dir: str | None, extra: dict,
 ) -> tuple[DataFrame, LoopResult]:
-    """The whole loop, and the reference post-pass, in one ``mapInArrow``
-    task; one Spark job, plus two when ``checkpoint_dir`` is set.
-    Returns the final ranks and a loop record shaped like the
+    """The whole loop, and the reference post-pass, in one task
+    (``in_task.run``); one Spark job, plus two when ``checkpoint_dir``
+    is set. Returns the final ranks and a loop record shaped like the
     distributed loop's, with one history entry per iteration."""
-    spark = ctx.trans.sparkSession
     seed = resumed if resumed is not None else init_ranks
-    parts = [_tagged(ctx.trans, _TRANS, "src", "dst", "p"),
-             _tagged(ctx.vertices, _VERTEX, "vid")]
+    parts = [in_task.tagged(ctx.trans, _TRANS, "src", "dst", "p"),
+             in_task.tagged(ctx.vertices, _VERTEX, "vid")]
     if mode == "reference":
-        parts.append(_tagged(ctx.in_strength, _IN_W, "vid", x="in_w"))
+        parts.append(in_task.tagged(ctx.in_strength, _IN_W, "vid", x="in_w"))
     if seed is not None:
-        parts.append(_tagged(seed, _SEED, "vid", x="rank"))
+        parts.append(in_task.tagged(seed, _SEED, "vid", x="rank"))
     kernel = _in_task_kernel(
         a, tol, max_iter, start_iter, trunc_digits,
         warm=resumed is None and init_ranks is not None,
         virtual_vid=ctx.virtual_vid if mode == "reference" else None)
 
     t0 = time.time()
-    with aqe_disabled(spark):
-        out = (reduce(DataFrame.unionByName, parts).coalesce(1)
-               .mapInArrow(kernel, _IN_TASK_OUT).localCheckpoint(eager=False))
-        # the one job: runs the kernel and keeps its output as the checkpoint
-        hist = sorted(out.filter(F.col("tag") == _ITER)
-                      .select("vid", "diff", "secs").collect())
+    out = in_task.run(parts, kernel, _IN_TASK_OUT)
+    # the one job: runs the kernel and keeps its output as the checkpoint
+    hist = sorted(out.filter(F.col("tag") == _ITER)
+                  .select("vid", "diff", "secs").collect())
     state = out.filter(F.col("tag") == _STATE).select("vid", "rank", "diff")
     errs = [h["diff"] for h in hist]
     iterations = start_iter + len(hist)
@@ -682,32 +656,19 @@ def _in_task(
 def _in_task_kernel(a: float, tol: float, max_iter: int, start_iter: int,
                     trunc_digits: int | None, warm: bool,
                     virtual_vid: int | None):
-    """The ``mapInArrow`` function for ``_in_task``: the same arithmetic,
-    in the same order, as the distributed step and post-pass, with
-    per-vertex sums as ``np.bincount`` scatters over a vertex index
-    built once.
+    """The kernel for ``_in_task``: the same arithmetic, in the same
+    order, as the distributed step and post-pass, with per-vertex sums
+    as ``np.bincount`` scatters over a vertex index built once.
 
-    The function travels to the Python worker by value. Outside trunc
-    mode it references nothing of this package, so workers need only
-    NumPy and PyArrow, as the distributed loop needs no Python at all."""
+    Outside trunc mode it references nothing of this package, so
+    workers need only NumPy and PyArrow, as the distributed loop needs
+    no Python at all."""
     trunc = partial(trunc_py, count=trunc_digits) if trunc_digits else None
 
-    def rows(tag: int, vid, rank=None, diff=None, secs=None) -> pa.RecordBatch:
-        # one _IN_TASK_OUT batch; missing columns are zeros
-        k = len(vid)
-        cols = [np.full(k, tag, np.int32), np.asarray(vid, np.int64)] + [
-            np.zeros(k) if c is None else np.asarray(c, np.float64)
-            for c in (rank, diff, secs)]
-        return pa.RecordBatch.from_arrays(
-            [pa.array(c) for c in cols],
-            names=["tag", "vid", "rank", "diff", "secs"])
-
-    def kernel(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+    def kernel(tag, ka, kb, val):
         def tr(v):
             return np.array([trunc(f) for f in v.tolist()])
 
-        t = pa.Table.from_batches(list(batches))
-        tag, ka, kb, val = (t.column(c).to_numpy() for c in ("tag", "a", "b", "x"))
         vids = np.sort(ka[tag == _VERTEX])
         n = len(vids)
         uniform = 1.0 / n
@@ -758,9 +719,9 @@ def _in_task_kernel(a: float, tol: float, max_iter: int, start_iter: int,
             if errs[-1] < tol:
                 break
 
-        yield rows(_STATE, vids, x, diff)
-        yield rows(_ITER, np.arange(start_iter + 1, it + 1),
-                   diff=np.array(errs), secs=np.array(secs))
+        yield _STATE, {"vid": vids, "rank": x, "diff": diff}
+        yield _ITER, {"vid": np.arange(start_iter + 1, it + 1),
+                      "diff": np.array(errs), "secs": np.array(secs)}
         if virtual_vid is not None:
             # the reference post-pass, as _reference_postpass
             is_v = vids == virtual_vid
@@ -770,7 +731,7 @@ def _in_task_kernel(a: float, tol: float, max_iter: int, start_iter: int,
             r = x[~is_v] / (1.0 - x[is_v].sum())
             r = r / r.sum()
             r = r + 0.5 * w[~is_v] / val[iw].sum()
-            yield rows(_RANK, vids[~is_v], r / r.sum())
+            yield _RANK, {"vid": vids[~is_v], "rank": r / r.sum()}
 
     return kernel
 

@@ -18,15 +18,33 @@ stores the oriented (u, v, dv) table sorted-BUCKETED by the wedge apex
 ``u``; ``triangle_counts_prepared`` then enumerates wedges with a
 self-join whose both sides are bucketed scans — NO Exchange precedes
 the first join (asserted in tests/test_triangles_prepared.py).
+
+Physical design. ``triangle_counts`` over an edge table of at most
+``in_task.IN_TASK_MAX_EDGES`` rows (one ``count()`` decides) runs in one
+task (graph/in_task.py) as NumPy: the same canonical pairs and the same
+(deg, vid) orientation, wedges closed by ``np.searchsorted`` on the
+sorted oriented-edge keys, per-vertex counts by ``np.bincount`` over the
+three corners. Wedges are enumerated a bounded number at a time, so the
+task holds O(E + chunk) on hub-heavy graphs. That is one Spark job
+where the distributed path pays a handful of shuffles and
+materializations. ``num_partitions`` and ``assume_canonical`` tune only
+the distributed path, which runs above the threshold; the prepared-
+table functions always run distributed.
 """
 
 from __future__ import annotations
 
+import time
 from dataclasses import dataclass
 
+import numpy as np
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from . import in_task
 from .loop import graph_partitions, shuffle_partitions_pinned
+
+# wedges the in-task kernel enumerates at a time (~8 MB per int64 array)
+_WEDGE_CHUNK = 1 << 20
 
 
 @dataclass
@@ -119,8 +137,8 @@ def triangle_counts(edges: DataFrame, num_partitions: int | None = None,
     undirected pairs as (src < dst) — e.g. a canonical edge table
     maintained at write time — and skips the canonicalizing
     ``distinct``, the dominant shuffle at 10^11 edges (PLANS.md)."""
-    import time
-
+    if in_task.fits(edges):
+        return _tri_in_task(edges)
     t0 = time.time()
     spark = edges.sparkSession
 
@@ -148,6 +166,62 @@ def triangle_counts(edges: DataFrame, num_partitions: int | None = None,
     e.unpersist()
     tris.unpersist()
     return TriangleResult(per_vertex, total, time.time() - t0)
+
+
+def _tri_in_task(edges: DataFrame) -> TriangleResult:
+    t0 = time.time()
+    # record: vid = the total triangle count
+    per_vertex, rec = in_task.run_graph(edges, _tri_kernel(),
+                                        "vid long, triangles long")
+    return TriangleResult(per_vertex, rec["vid"], time.time() - t0)
+
+
+def _tri_kernel():
+    """The in-task count: ``_canonical``, ``_orient`` and
+    ``_count_from_oriented`` over NumPy arrays. Vertices are renumbered
+    by their (deg, vid) rank, so an oriented edge runs from the lower
+    rank to the higher, and the wedges at an apex are the pairs of its
+    out-edges in rank order."""
+
+    def kernel(src, dst, x):
+        lo, hi = np.minimum(src, dst), np.maximum(src, dst)
+        loop = lo == hi
+        lo, hi = lo[~loop], hi[~loop]
+        vids = np.unique(np.concatenate([lo, hi]))
+        n = len(vids)
+        pair = np.unique(np.searchsorted(vids, lo) * n + np.searchsorted(vids, hi))
+        a, b = pair // n, pair % n
+        deg = np.bincount(a, minlength=n) + np.bincount(b, minlength=n)
+        # vertex indices are in vid order, so this sorts by (deg, vid)
+        rank = np.empty(n, np.int64)
+        rank[np.lexsort((np.arange(n), deg))] = np.arange(n)
+        ra, rb = rank[a], rank[b]
+        key = np.sort(np.minimum(ra, rb) * n + np.maximum(ra, rb))
+        u, v = key // n, key % n
+        m = len(key)
+        # out-edge i pairs with every later out-edge of its apex
+        later = np.searchsorted(u, u, side="right") - np.arange(m) - 1
+        ends = np.cumsum(later)
+        tri = np.zeros(n, np.int64)  # per rank
+        total = 0
+        i0 = 0
+        while i0 < m:
+            done = ends[i0 - 1] if i0 else 0
+            i1 = max(i0 + 1, int(np.searchsorted(ends, done + _WEDGE_CHUNK,
+                                                 side="right")))
+            c = later[i0:i1]
+            i = np.repeat(np.arange(i0, i1), c)
+            j = i + 1 + np.arange(len(i)) - np.repeat(np.cumsum(c) - c, c)
+            y, z = v[i], v[j]
+            q = y * n + z
+            hit = key[np.minimum(np.searchsorted(key, q), m - 1)] == q
+            for corner in (u[i][hit], y[hit], z[hit]):
+                tri += np.bincount(corner, minlength=n)
+            total += int(np.count_nonzero(hit))
+            i0 = i1
+        return {"vid": vids, "triangles": tri[rank]}, {"vid": total}
+
+    return kernel
 
 
 def prepare_oriented_edges(
@@ -181,8 +255,6 @@ def triangle_counts_prepared(spark: SparkSession, table: str,
     directly on the bucketed scan (zero Exchange before the first join
     — the closing-edge semi-join on (y, z) is the count's only
     shuffle)."""
-    import time
-
     t0 = time.time()
     e = spark.table(table)
     p = num_partitions or graph_partitions(spark, e.count())

@@ -18,12 +18,13 @@ def spark() -> SparkSession:
 
 
 @pytest.fixture
-def distributed_pagerank(monkeypatch):
-    """Force PageRank onto the distributed loop: test graphs are far
-    below ``IN_TASK_MAX_EDGES`` and would otherwise run in one task."""
-    import pagerank_service_spark.graph.pagerank as pr
+def distributed_graph(monkeypatch):
+    """Force PageRank, CC, LP and triangles onto their distributed
+    paths: test graphs are far below ``in_task.IN_TASK_MAX_EDGES`` and
+    would otherwise run in one task."""
+    from pagerank_service_spark.graph import in_task
 
-    monkeypatch.setattr(pr, "IN_TASK_MAX_EDGES", 0)
+    monkeypatch.setattr(in_task, "IN_TASK_MAX_EDGES", 0)
 
 
 def edges_df(spark, triples):

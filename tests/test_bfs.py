@@ -111,3 +111,16 @@ def test_bfs_assume_distinct_matches_default(spark):
             for r in bfs_distances_from(df, srcs, max_hops=21, directed=True,
                                         assume_distinct=True).collect()}
     assert fast == base and len(base) > 1
+
+
+def test_bfs_assume_distinct_requires_directed(spark):
+    """The undirected adjacency adds each edge's reverse, which can
+    duplicate rows, so assume_distinct cannot hold there: refused, not
+    silently ignored."""
+    from pagerank_service_spark.graph.bfs import bfs_distances_from
+
+    df = spark.createDataFrame(fixture_edges("chain10"),
+                               "src long, dst long, weight double")
+    srcs = spark.createDataFrame([(1,)], "source long")
+    with pytest.raises(ValueError, match="directed"):
+        bfs_distances_from(df, srcs, directed=False, assume_distinct=True)

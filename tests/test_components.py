@@ -180,3 +180,31 @@ def test_star_cc_max_iter_bailout_flagged(spark):
     triples = fixture_edges("chain10")
     res = connected_components_star(edges_df(spark, triples), max_iter=1)
     assert not res.converged
+
+
+@pytest.mark.parametrize("cmd,name,cut,want", [
+    ("components", "chain10", True, (1, False)),
+    ("components", "chain10", False, (0, True)),
+    ("labelprop", "bipair", False, (1, False)),  # a 2-cycle never settles
+    ("labelprop", "two_cliques_bridge", False, (0, True)),
+])
+def test_cli_reports_convergence(spark, tmp_path, capsys, monkeypatch, cmd,
+                                 name, cut, want):
+    """CLI ``components`` and ``labelprop`` print ``converged`` and exit
+    nonzero when the loop stopped at max_iter."""
+    import json
+    from functools import partial
+
+    from pagerank_service_spark import cli
+    from pagerank_service_spark.graph import components
+
+    if cut:  # chain10 needs more than one round
+        monkeypatch.setattr(components, "connected_components",
+                            partial(components.connected_components,
+                                    max_iter=1))
+    edges = str(tmp_path / "edges")
+    edges_df(spark, fixture_edges(name)).write.parquet(edges)
+    code = cli.main(["--shuffle-partitions", "4", cmd, "--edges", edges,
+                     "--output", str(tmp_path / "out")])
+    out = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    assert (code, out["converged"]) == want

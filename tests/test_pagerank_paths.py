@@ -1,9 +1,9 @@
 """The two PageRank paths (graph/pagerank.py, "Physical design").
 
-Test graphs are far below ``IN_TASK_MAX_EDGES``, so the PageRank,
-trunc-mode and golden suites run on the in-task path in their own
-modules. They are collected here a second time with the distributed
-loop forced by ``distributed_pagerank``. The tests defined below
+Test graphs are far below ``in_task.IN_TASK_MAX_EDGES``, so the
+PageRank, trunc-mode and golden suites run on the in-task path in their
+own modules. They are collected here a second time with the distributed
+loop forced by ``distributed_graph``. The tests defined below
 compare the two paths directly, choosing each run's path themselves.
 """
 
@@ -13,20 +13,21 @@ import pytest
 
 import pagerank_service_spark.graph.pagerank as pr
 from pagerank_service_spark.datagen import zipf_random_edges
+from pagerank_service_spark.graph import in_task
 
 from conftest import edges_df
 from test_golden_fixture import *  # noqa: F401,F403
 from test_pagerank import *  # noqa: F401,F403
 from test_trunc_mode import *  # noqa: F401,F403
 
-pytestmark = pytest.mark.usefixtures("distributed_pagerank")
+pytestmark = pytest.mark.usefixtures("distributed_graph")
 
-IN_TASK_MAX_EDGES = pr.IN_TASK_MAX_EDGES  # read before any test patches it
+IN_TASK_MAX_EDGES = in_task.IN_TASK_MAX_EDGES  # read before any test patches it
 PATHS = ("in_task", "distributed")
 
 
 def _use(monkeypatch, path: str) -> None:
-    monkeypatch.setattr(pr, "IN_TASK_MAX_EDGES",
+    monkeypatch.setattr(in_task, "IN_TASK_MAX_EDGES",
                         IN_TASK_MAX_EDGES if path == "in_task" else 0)
 
 
