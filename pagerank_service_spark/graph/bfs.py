@@ -14,7 +14,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-from .loop import graph_partitions, shuffle_partitions_pinned
+from .loop import aqe_disabled, graph_partitions, shuffle_partitions_pinned
 
 
 def bfs_distances(
@@ -58,9 +58,10 @@ def bfs_distances_from(
             edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
         )
     dedup = not assume_distinct
-    if dedup:
-        adj = adj.distinct().persist()
-    p = graph_partitions(spark, adj.count())
+    with aqe_disabled(spark):  # as in components.connected_components
+        if dedup:
+            adj = adj.distinct().persist()
+        p = graph_partitions(spark, adj.count())
 
     frontier = sources.select(
         F.col("source").cast("long").alias("source"),

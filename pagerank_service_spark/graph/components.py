@@ -36,7 +36,12 @@ import numpy as np
 from pyspark.sql import DataFrame, functions as F
 
 from . import in_task
-from .loop import graph_partitions, run_loop, shuffle_partitions_pinned
+from .loop import (
+    aqe_disabled,
+    graph_partitions,
+    run_loop,
+    shuffle_partitions_pinned,
+)
 
 
 @dataclass
@@ -65,15 +70,18 @@ def connected_components(
         return _cc_in_task(edges, max_iter)
     spark = edges.sparkSession
     if assume_symmetric:
-        und0 = edges.select("src", "dst").persist()
+        und0 = edges.select("src", "dst")
     else:
         und0 = (
             edges.select("src", "dst")
             .unionByName(edges.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
             .distinct()
-            .persist()
         )
-    p = num_partitions or graph_partitions(spark, und0.count())
+    # the sizing count, and the cache it fills, planned with AQE off: with
+    # it on, each exchange under the count runs as a job of its own
+    with aqe_disabled(spark):
+        und0 = und0.persist()
+        p = num_partitions or graph_partitions(spark, und0.count())
     # LAZY: the loop's first materialization computes the repartition
     # and populates the cache (was an eager count barrier — round-6
     # job-budget trim); und0 stays cached until after the loop so a
@@ -217,17 +225,17 @@ def connected_components_star(
         edges.select(F.col("src").alias("vid"))
         .unionByName(edges.select(F.col("dst").alias("vid")))
         .distinct()
-        .persist()
     )
     e0 = (
         edges.select("src", "dst")
         .filter(F.col("src") != F.col("dst"))
         .select(F.least("src", "dst").alias("u"), F.greatest("src", "dst").alias("v"))
         .distinct()
-        .persist()
     )
-    p = num_partitions or graph_partitions(spark, e0.count())
-    all_v.count()
+    with aqe_disabled(spark):  # as in connected_components
+        all_v, e0 = all_v.persist(), e0.persist()
+        p = num_partitions or graph_partitions(spark, e0.count())
+        all_v.count()
 
     def checksum(e: DataFrame):
         row = e.agg(

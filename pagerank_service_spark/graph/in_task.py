@@ -3,9 +3,11 @@
 At the sizes ``IN_TASK_MAX_EDGES`` admits, a graph kernel's edge work is
 microseconds per round, and on Spark its cost is job scheduling: the
 distributed loops submit one or more jobs per round. Below the
-threshold, PageRank, connected components, label propagation and
-triangle counting each run their whole computation as NumPy inside one
-``mapInArrow`` task (``run``): one Spark job, however many rounds.
+threshold, PageRank's preparation (virtual node and row-normalize,
+after a collapse job) and its loop, connected components, label
+propagation and triangle counting each run their whole computation as
+NumPy inside one ``mapInArrow`` task (``run``): one Spark job, however
+many rounds.
 
 ``IN_TASK_MAX_EDGES`` bounds what one Python worker holds and what one
 core computes; it is not a crossover point. Measured near it on a 4-vCPU
@@ -41,8 +43,6 @@ IN_TASK_MAX_EDGES = 200_000
 # the columns every ``tagged`` frame has, as the kernel receives them
 _IN = pa.schema([("tag", pa.int32()), ("a", pa.int64()), ("b", pa.int64()),
                  ("x", pa.float64())])
-# the tags of ``run_graph``'s output: value rows, then one record row
-_ROW, _RECORD = 0, 1
 
 
 def fits(edges: DataFrame) -> bool:
@@ -105,25 +105,48 @@ def run(parts: list[DataFrame], kernel: Callable, schema: str) -> DataFrame:
                 .mapInArrow(task, schema).localCheckpoint(eager=False))
 
 
-def run_graph(edges: DataFrame, kernel: Callable, schema: str,
-              x: str | None = None) -> tuple[DataFrame, Row]:
-    """Run a graph kernel over ``edges`` in one task (``run``).
+def run_tables(edges: DataFrame, kernel: Callable, schema: str,
+               tables: dict[str, tuple[str, ...]],
+               x: str | None = None) -> tuple[dict[str, DataFrame], Row]:
+    """Run a graph kernel that makes several tables over ``edges`` in
+    one task (``run``).
 
     ``kernel(src, dst, x)`` gets the (src, dst[, x]) columns as NumPy
-    arrays and returns ``(rows, record)``: ``rows`` maps columns of
-    ``schema`` to equal-length arrays, ``record`` maps them to single
-    values (the run's rounds, convergence or total). Returns the rows
-    as a DataFrame of ``schema`` and the record as a Row; the call runs
-    the one job that computes both."""
+    arrays and returns ``(arrays, record)``: ``arrays`` maps each name
+    of ``tables`` to columns of ``schema`` as equal-length arrays,
+    ``record`` maps columns of ``schema`` to single values. Returns each
+    table as a DataFrame of its ``tables`` columns, and the record as a
+    Row; the call runs the one job that computes them all."""
+    names = list(tables)
+    record_tag = len(names)
 
     def tagged_kernel(tag, src, dst, x):
-        rows, record = kernel(src, dst, x)
-        yield _ROW, rows
-        yield _RECORD, {k: [v] for k, v in record.items()}
+        arrays, record = kernel(src, dst, x)
+        for t, name in enumerate(names):
+            yield t, arrays[name]
+        yield record_tag, {k: [v] for k, v in record.items()}
 
-    out = run([tagged(edges, _ROW, "src", "dst", x)], tagged_kernel,
+    out = run([tagged(edges, 0, "src", "dst", x)], tagged_kernel,
               "tag int, " + schema)
     # the one job: runs the kernel and keeps its output as the checkpoint
-    (rec,) = out.filter(F.col("tag") == _RECORD).collect()
-    cols = StructType.fromDDL(schema).fieldNames()
-    return out.filter(F.col("tag") == _ROW).select(*cols), rec
+    (rec,) = out.filter(F.col("tag") == record_tag).collect()
+    return ({name: out.filter(F.col("tag") == t).select(*tables[name])
+             for t, name in enumerate(names)}, rec)
+
+
+def run_graph(edges: DataFrame, kernel: Callable, schema: str,
+              x: str | None = None) -> tuple[DataFrame, Row]:
+    """``run_tables`` for a kernel that makes one table.
+
+    ``kernel(src, dst, x)`` returns ``(rows, record)``: ``rows`` maps
+    columns of ``schema`` to equal-length arrays, ``record`` maps them
+    to single values (the run's rounds, convergence or total). Returns
+    the rows as a DataFrame of ``schema`` and the record as a Row."""
+
+    def one_table(src, dst, x):
+        rows, record = kernel(src, dst, x)
+        return {"rows": rows}, record
+
+    cols = tuple(StructType.fromDDL(schema).fieldNames())
+    tables, rec = run_tables(edges, one_table, schema, {"rows": cols}, x)
+    return tables["rows"], rec

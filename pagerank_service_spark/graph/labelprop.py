@@ -42,7 +42,12 @@ import numpy as np
 from pyspark.sql import DataFrame, functions as F
 
 from . import in_task
-from .loop import graph_partitions, run_loop, shuffle_partitions_pinned
+from .loop import (
+    aqe_disabled,
+    graph_partitions,
+    run_loop,
+    shuffle_partitions_pinned,
+)
 
 
 @dataclass
@@ -72,9 +77,10 @@ def label_propagation(
         )
         .groupBy("src", "dst")
         .agg(F.sum("weight").alias("weight"))
-        .persist()
     )
-    p = num_partitions or graph_partitions(spark, und0.count())
+    with aqe_disabled(spark):  # as in components.connected_components
+        und0 = und0.persist()
+        p = num_partitions or graph_partitions(spark, und0.count())
     # LAZY: the loop's first materialization computes the repartition
     # and populates the cache (round-6 job-budget trim; und0 stays
     # cached until after the loop — see components.py)

@@ -13,8 +13,15 @@ Two semantic modes:
 * ``mode="standard"`` — classic damped PageRank (alpha=0.85 default)
   with dangling-mass redistribution; the generic API.
 
-Physical design. A prepared graph takes one of two paths, chosen by
-the size of its transition table:
+Physical design. Preparation (``prepare_graph``: collapse, virtual
+node, row-normalize) persists the collapse and counts it in one job.
+At most ``in_task.IN_TASK_MAX_EDGES`` collapsed edges are prepared in
+one task: one more job runs the NumPy kernel, and the context's tables
+are views of its checkpointed output. Larger graphs are prepared as
+Spark jobs, which persist each table and hash-partition ``trans`` on
+``src`` (into ``num_partitions`` partitions when given). A prepared
+graph then takes one of two paths, chosen by the size of its
+transition table:
 
 * **in one task**, when ``trans`` has at most
   ``in_task.IN_TASK_MAX_EDGES`` rows (graph/in_task.py has the
@@ -71,9 +78,10 @@ from .loop import (
 
 @dataclass
 class GraphContext:
-    trans: DataFrame          # (src, dst, p) row-normalized, persisted
-    vertices: DataFrame       # (vid,) persisted
-    dangling: DataFrame       # (vid,) nodes with no out-edges, persisted
+    # persisted, or views of the in-task prepare's checkpointed output
+    trans: DataFrame          # (src, dst, p) row-normalized
+    vertices: DataFrame       # (vid,)
+    dangling: DataFrame       # (vid,) nodes with no out-edges
     in_strength: DataFrame | None  # (vid, in_w); None in standard mode
     n: int
     n_edges: int
@@ -177,102 +185,184 @@ def prepare_graph(
     num_partitions: int | None = None,
     add_virtual: bool = True,
 ) -> GraphContext:
-    """edges -> persisted, row-normalized transition structure.
+    """edges -> row-normalized transition structure.
 
-    When ``num_partitions`` is not given, the partition count is sized
-    from the COLLAPSED edge count (graph_partitions: ~75k
-    edges/partition, capped at the session shuffle partitions) — one
-    extra cached count pass, repaid every iteration by not scattering a
-    small graph across empty tasks (AQE would do this for one-shot
-    queries but is pinned off in loops).
+    Collapse multi-edges (weight summed per (src, dst), kept when > 0),
+    then in reference mode (``add_virtual``) add the virtual node, then
+    row-normalize by out-sum (network_util.py:529-564). The vertices
+    are every endpoint, the dangling set those with no out-edge.
+
+    The collapse is persisted, and one job counts it (and finds the
+    largest vid). At most ``in_task.IN_TASK_MAX_EDGES`` collapsed edges
+    are prepared in one task (``_prepare_in_task``): one more job, and
+    the context's tables are views of its checkpointed output. Larger
+    graphs are prepared as Spark jobs (``_prepare_distributed``), whose
+    tables are persisted. ``num_partitions`` tunes only the distributed
+    layout: ``trans`` hash-partitioned on ``src`` into that many
+    partitions. When not given, that count is sized from the collapsed
+    edge count (graph_partitions: ~75k edges/partition, capped at the
+    session shuffle partitions), repaid every iteration by not
+    scattering a small graph across empty tasks (AQE would do this for
+    one-shot queries but is pinned off in loops).
+
+    Raises ``ValueError`` in reference mode when the largest vid is
+    ``2**63 - 1``: the virtual node's vid would not fit a long.
     """
     spark = edges.sparkSession
     # AQE would plan each of the small exchanges below as its own job
     # (21 jobs instead of 5 on a 20k-edge graph)
     with aqe_disabled(spark):
-        e = collapse(edges)
-        e0 = None
-        mx = None
-        if num_partitions is None:
-            e0 = e.persist()
-            # ONE pass for the partition-sizing count AND (reference mode)
-            # the max-vid scan — these were two sequential driver jobs over
-            # the same cached table (round-6 job-count trim; the daily
-            # lifecycle pays this prepare once per day and once per
-            # alone-symbol)
+        e0 = collapse(edges).persist()
+        try:
+            # ONE pass over the collapse for the size, which picks the
+            # path and the partition count, AND (reference mode) the
+            # max-vid scan
             aggs = [F.count(F.lit(1)).alias("cnt")]
             if add_virtual:
                 aggs.append(F.greatest(F.max("src"), F.max("dst")).alias("m"))
             row = e0.agg(*aggs).first()
-            p = graph_partitions(spark, row["cnt"])
-            if add_virtual:
-                mx = row["m"]
-            e = e0
-        else:
-            p = num_partitions
-            if add_virtual:
-                mx = e.agg(
-                    F.greatest(F.max("src"), F.max("dst")).alias("m")
-                ).first()["m"]
-        # in-strength is needed for the virtual node and the +add bonus
-        # (reference mode only) — skip the extra full pass otherwise.
-        in_strength = None
-        virtual_vid = None
-        if add_virtual:
-            in_strength = (
-                e.groupBy("dst").agg(F.sum("weight").alias("in_w"))
-                .withColumnRenamed("dst", "vid")
-                .persist()
-            )
-            # virtual node = max(vid)+1 with bidirectional edges weighted
-            # in_strength/10 (network_util.py:544-564); nodes with zero
-            # in-strength get none (see oracle.py docstring).
-            virtual_vid = int(mx) + 1
-            ve = in_strength.filter(F.col("in_w") > 0).select(
-                F.col("vid"), (F.col("in_w") / 10.0).alias("weight")
-            )
-            v_out = ve.select(F.lit(virtual_vid).cast("long").alias("src"),
-                              F.col("vid").alias("dst"), "weight")
-            v_in = ve.select(F.col("vid").alias("src"),
-                             F.lit(virtual_vid).cast("long").alias("dst"), "weight")
-            e = e.unionByName(v_out).unionByName(v_in)
+            # virtual node = max(vid)+1; none for a graph with no edges
+            virtual_vid = _virtual_vid(row["m"]) if add_virtual else None
+            if row["cnt"] <= in_task.IN_TASK_MAX_EDGES:
+                return _prepare_in_task(e0, num_partitions, add_virtual,
+                                        virtual_vid)
+            p = num_partitions or graph_partitions(spark, row["cnt"])
+            return _prepare_distributed(e0, p, add_virtual, virtual_vid)
+        finally:
+            # both paths have materialized what they read of it
+            e0.unpersist()
 
-        # One shuffle lays e out by src; out-sums and the row-normalized
-        # trans table then reuse that partitioning (no further exchanges —
-        # groupBy("src") and join("src") are satisfied by the persisted
-        # HashPartitioning(src, p)).
-        e = e.repartition(p, "src").persist()
-        out_sum = e.groupBy("src").agg(F.sum("weight").alias("out_w"))
-        trans = (
-            e.join(out_sum, "src")
-            .select("src", "dst", (F.col("weight") / F.col("out_w")).alias("p"))
+
+def _virtual_vid(max_vid: int | None) -> int | None:
+    """The virtual node's vid, max(vid) + 1; None for a graph with no
+    edges."""
+    if max_vid is None:
+        return None
+    if max_vid >= 2**63 - 1:
+        raise ValueError(
+            f"largest vid {max_vid} leaves no room for the virtual node "
+            "(max vid + 1 must fit a long)")
+    return int(max_vid) + 1
+
+
+def _prepare_distributed(e: DataFrame, p: int, add_virtual: bool,
+                         virtual_vid: int | None) -> GraphContext:
+    """``prepare_graph`` after the collapse ``e``, as Spark jobs (4 on
+    a small graph)."""
+    # in-strength is needed for the virtual node and the +add bonus
+    # (reference mode only) — skip the extra full pass otherwise.
+    in_strength = None
+    if add_virtual:
+        in_strength = (
+            e.groupBy("dst").agg(F.sum("weight").alias("in_w"))
+            .withColumnRenamed("dst", "vid")
             .persist()
         )
-        n_edges = trans.count()  # materialize
-        # vertex set from the two ALREADY-AGGREGATED sides (distinct srcs =
-        # out_sum keys; distinct dsts one groupBy away) — never a distinct
-        # over the raw 2x|E| union.
-        dst_set = e.groupBy("dst").agg(F.lit(1)).select(F.col("dst").alias("vid"))
-        src_set = out_sum.select(F.col("src").alias("vid"))
-        vertices = src_set.unionByName(dst_set).distinct().persist()
-        dangling = vertices.join(
-            out_sum.withColumnRenamed("src", "vid"), "vid", "left_anti"
-        ).persist()
-        # ONE fused job counts vertices and probes the dangling set (was a
-        # vertices.count plus a dangling.limit(1).count barrier); both
-        # persists materialize inside it
-        counts = dict(
-            vertices.select(F.lit("v").alias("k"))
-            .unionByName(dangling.select(F.lit("d").alias("k")))
-            .groupBy("k").count().collect()
+        # virtual node = max(vid)+1 with bidirectional edges weighted
+        # in_strength/10 (network_util.py:544-564); nodes with zero
+        # in-strength get none (see oracle.py docstring).
+        ve = in_strength.filter(F.col("in_w") > 0).select(
+            F.col("vid"), (F.col("in_w") / 10.0).alias("weight")
         )
-        n = int(counts.get("v", 0))
-        has_dangling = bool(counts.get("d", 0))
-        e.unpersist()
-        if e0 is not None:
-            e0.unpersist()
-        return GraphContext(trans, vertices, dangling, in_strength, n, n_edges,
-                            has_dangling, virtual_vid, partitions=p)
+        v_out = ve.select(F.lit(virtual_vid).cast("long").alias("src"),
+                          F.col("vid").alias("dst"), "weight")
+        v_in = ve.select(F.col("vid").alias("src"),
+                         F.lit(virtual_vid).cast("long").alias("dst"), "weight")
+        e = e.unionByName(v_out).unionByName(v_in)
+
+    # One shuffle lays e out by src; out-sums and the row-normalized
+    # trans table then reuse that partitioning (no further exchanges —
+    # groupBy("src") and join("src") are satisfied by the persisted
+    # HashPartitioning(src, p)).
+    e = e.repartition(p, "src").persist()
+    out_sum = e.groupBy("src").agg(F.sum("weight").alias("out_w"))
+    trans = (
+        e.join(out_sum, "src")
+        .select("src", "dst", (F.col("weight") / F.col("out_w")).alias("p"))
+        .persist()
+    )
+    n_edges = trans.count()  # materialize
+    # vertex set from the two ALREADY-AGGREGATED sides (distinct srcs =
+    # out_sum keys; distinct dsts one groupBy away) — never a distinct
+    # over the raw 2x|E| union.
+    dst_set = e.groupBy("dst").agg(F.lit(1)).select(F.col("dst").alias("vid"))
+    src_set = out_sum.select(F.col("src").alias("vid"))
+    vertices = src_set.unionByName(dst_set).distinct().persist()
+    dangling = vertices.join(
+        out_sum.withColumnRenamed("src", "vid"), "vid", "left_anti"
+    ).persist()
+    # ONE fused job counts vertices and probes the dangling set (was a
+    # vertices.count plus a dangling.limit(1).count barrier); both
+    # persists materialize inside it
+    counts = dict(
+        vertices.select(F.lit("v").alias("k"))
+        .unionByName(dangling.select(F.lit("d").alias("k")))
+        .groupBy("k").count().collect()
+    )
+    n = int(counts.get("v", 0))
+    has_dangling = bool(counts.get("d", 0))
+    e.unpersist()
+    return GraphContext(trans, vertices, dangling, in_strength, n, n_edges,
+                        has_dangling, virtual_vid, partitions=p)
+
+
+def _prepare_in_task(e: DataFrame, num_partitions: int | None,
+                     add_virtual: bool,
+                     virtual_vid: int | None) -> GraphContext:
+    """``prepare_graph`` after the collapse ``e``, in one task
+    (``in_task.run_tables``): one Spark job, whose checkpointed output
+    the context's tables are views of."""
+    tables = {"trans": ("src", "dst", "p"), "vertices": ("vid",),
+              "dangling": ("vid",)}
+    if add_virtual:
+        tables["in_strength"] = ("vid", "in_w")
+    t, rec = in_task.run_tables(
+        e, _prepare_kernel(add_virtual, virtual_vid),
+        "src long, dst long, p double, vid long, in_w double, n long, "
+        "n_edges long, has_dangling boolean", tables, x="weight")
+    n_edges = rec["n_edges"]
+    p = num_partitions or graph_partitions(e.sparkSession, n_edges)
+    trans = t["trans"]
+    if n_edges > in_task.IN_TASK_MAX_EDGES:
+        # the virtual edges took trans past the threshold, so the
+        # distributed loop will run it: lay it out as
+        # _prepare_distributed does
+        trans = trans.repartition(p, "src").persist()
+    return GraphContext(trans, t["vertices"], t["dangling"],
+                        t.get("in_strength"), rec["n"], n_edges,
+                        rec["has_dangling"], virtual_vid, partitions=p)
+
+
+def _prepare_kernel(add_virtual: bool, virtual_vid: int | None):
+    """The kernel for ``_prepare_in_task``: ``_prepare_distributed``'s
+    steps over the collapsed edges as NumPy arrays, per-key sums as
+    ``np.bincount`` over a ``np.unique`` index. It references nothing
+    of this package."""
+
+    def kernel(src, dst, w):
+        arrays = {}
+        if add_virtual:
+            in_vid, inv = np.unique(dst, return_inverse=True)
+            in_w = np.bincount(inv, weights=w)
+            arrays["in_strength"] = {"vid": in_vid, "in_w": in_w}
+            if virtual_vid is not None:
+                ve = in_w > 0
+                vv = np.full(np.count_nonzero(ve), virtual_vid, np.int64)
+                vw = in_w[ve] / 10.0
+                src = np.concatenate([src, vv, in_vid[ve]])
+                dst = np.concatenate([dst, in_vid[ve], vv])
+                w = np.concatenate([w, vw, vw])
+        # row-normalize by out-sum
+        srcs, inv = np.unique(src, return_inverse=True)
+        p = w / np.bincount(inv, weights=w)[inv]
+        vertices = np.union1d(srcs, dst)
+        dangling = np.setdiff1d(vertices, srcs, assume_unique=True)
+        arrays.update(trans={"src": src, "dst": dst, "p": p},
+                      vertices={"vid": vertices}, dangling={"vid": dangling})
+        return arrays, {"n": len(vertices), "n_edges": len(src),
+                        "has_dangling": len(dangling) > 0}
+
+    return kernel
 
 
 def _messages(ctx: GraphContext, ranks: DataFrame,

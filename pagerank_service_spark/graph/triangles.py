@@ -41,7 +41,7 @@ import numpy as np
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from . import in_task
-from .loop import graph_partitions, shuffle_partitions_pinned
+from .loop import aqe_disabled, graph_partitions, shuffle_partitions_pinned
 
 # wedges the in-task kernel enumerates at a time (~8 MB per int64 array)
 _WEDGE_CHUNK = 1 << 20
@@ -143,10 +143,12 @@ def triangle_counts(edges: DataFrame, num_partitions: int | None = None,
     spark = edges.sparkSession
 
     if assume_canonical:
-        canon = edges.select(F.col("src").alias("a"), F.col("dst").alias("b")).persist()
+        canon = edges.select(F.col("src").alias("a"), F.col("dst").alias("b"))
     else:
-        canon = _canonical(edges).persist()
-    p = num_partitions or graph_partitions(spark, canon.count())
+        canon = _canonical(edges)
+    with aqe_disabled(spark):  # as in components.connected_components
+        canon = canon.persist()
+        p = num_partitions or graph_partitions(spark, canon.count())
     # LAZY: the wedge-join materialization inside _count_from_oriented
     # computes the orient + repartition and populates the cache (was an
     # eager count barrier — round-6 job-budget trim; canon stays cached
@@ -238,8 +240,9 @@ def prepare_oriented_edges(
     from the same bucketed scan with no preceding Exchange. Returns the
     bucket count used."""
     spark = edges.sparkSession
-    canon = _canonical(edges).persist()
-    b = buckets or graph_partitions(spark, canon.count())
+    with aqe_disabled(spark):  # as in components.connected_components
+        canon = _canonical(edges).persist()
+        b = buckets or graph_partitions(spark, canon.count())
     w = _orient(canon).write.mode("overwrite").format("parquet")
     if path:
         w = w.option("path", path)
@@ -257,7 +260,8 @@ def triangle_counts_prepared(spark: SparkSession, table: str,
     shuffle)."""
     t0 = time.time()
     e = spark.table(table)
-    p = num_partitions or graph_partitions(spark, e.count())
+    with aqe_disabled(spark):  # as in components.connected_components
+        p = num_partitions or graph_partitions(spark, e.count())
     tris, per_vertex = _count_from_oriented(e, p)
     total = tris.count()
     with shuffle_partitions_pinned(spark, p):

@@ -19,9 +19,9 @@ def spark() -> SparkSession:
 
 @pytest.fixture
 def distributed_graph(monkeypatch):
-    """Force PageRank, CC, LP and triangles onto their distributed
-    paths: test graphs are far below ``in_task.IN_TASK_MAX_EDGES`` and
-    would otherwise run in one task."""
+    """Force PageRank (its preparation and its loop), CC, LP and
+    triangles onto their distributed paths: test graphs are far below
+    ``in_task.IN_TASK_MAX_EDGES`` and would otherwise run in one task."""
     from pagerank_service_spark.graph import in_task
 
     monkeypatch.setattr(in_task, "IN_TASK_MAX_EDGES", 0)

@@ -105,14 +105,20 @@ def test_hub_triangles_exact(spark, monkeypatch):
 
 def test_cc_max_iter_bailout(spark, monkeypatch):
     """A run cut at max_iter reports converged=False on both paths, with
-    the same partial labels."""
+    the same partial labels. The distributed run, collect included,
+    takes 8 jobs: its sizing count runs with AQE off (11 with it on,
+    which runs each exchange under the count as a job of its own)."""
     e = edges_df(spark, fixture_edges("chain10"))
-    runs = []
+    dag = spark.sparkContext._jsc.sc().dagScheduler()
+    runs, jobs = [], []
     for path in PATHS:
         _use(monkeypatch, path)
+        j0 = int(dag.nextJobId())
         runs.append(_record(connected_components, e, max_iter=1))
+        jobs.append(int(dag.nextJobId()) - j0)
     assert runs[0] == runs[1]
     assert runs[0][:2] == (1, False)
+    assert jobs[1] <= 8, jobs
 
 
 def test_in_task_job_budget(spark, monkeypatch):
@@ -135,7 +141,8 @@ def test_kernels_share_no_code_with_oracles():
     label_propagation_oracle, so they must neither call nor import
     them."""
     kernels = {_cc_kernel: (5,), _lp_kernel: (5,), _tri_kernel: (),
-               pr._in_task_kernel: (0.85, 1e-9, 5, 0, None, False, None)}
+               pr._in_task_kernel: (0.85, 1e-9, 5, 0, None, False, None),
+               pr._prepare_kernel: (True, 5)}
     for factory, args in kernels.items():
         for fn in (factory, factory(*args)):
             assert "oracle" not in inspect.getsource(fn), fn.__qualname__

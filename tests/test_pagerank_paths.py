@@ -1,19 +1,21 @@
 """The two PageRank paths (graph/pagerank.py, "Physical design").
 
 Test graphs are far below ``in_task.IN_TASK_MAX_EDGES``, so the
-PageRank, trunc-mode and golden suites run on the in-task path in their
-own modules. They are collected here a second time with the distributed
-loop forced by ``distributed_graph``. The tests defined below
-compare the two paths directly, choosing each run's path themselves.
+PageRank, trunc-mode and golden suites prepare and run each graph in
+one task in their own modules. They are collected here a second time
+with the distributed prepare and loop forced by ``distributed_graph``.
+The tests defined below compare the two paths directly, choosing each
+run's path themselves.
 """
 
 from __future__ import annotations
 
 import pytest
+from pyspark.sql import functions as F
 
 import pagerank_service_spark.graph.pagerank as pr
 from pagerank_service_spark.datagen import zipf_random_edges
-from pagerank_service_spark.graph import in_task
+from pagerank_service_spark.graph import in_task, oracle
 
 from conftest import edges_df
 from test_golden_fixture import *  # noqa: F401,F403
@@ -27,8 +29,9 @@ PATHS = ("in_task", "distributed")
 
 
 def _use(monkeypatch, path: str) -> None:
+    # -1, not 0: an empty edge table has 0 rows and would stay in one task
     monkeypatch.setattr(in_task, "IN_TASK_MAX_EDGES",
-                        IN_TASK_MAX_EDGES if path == "in_task" else 0)
+                        IN_TASK_MAX_EDGES if path == "in_task" else -1)
 
 
 def _ranks(res) -> dict[int, float]:
@@ -78,16 +81,125 @@ def test_checkpoint_resumes_across_paths(spark, tmp_path, monkeypatch,
 
 
 def test_in_task_job_budget(spark, tmp_path, monkeypatch):
-    """A small graph's whole run, checkpoint included, is a handful of
-    Spark jobs, however many iterations it takes (the distributed loop
-    submits about two per iteration). Counted as perfbench/spans.py
-    counts them: every job id the DAG scheduler hands out."""
+    """A small graph's preparation is two Spark jobs and its whole run,
+    checkpoint included, a handful, however many iterations it takes
+    (the distributed loop submits about two per iteration). Counted as
+    perfbench/spans.py counts them: every job id the DAG scheduler hands
+    out."""
     _use(monkeypatch, "in_task")
-    ctx = pr.prepare_graph(edges_df(spark, zipf_random_edges(500, seed=5)))
+    e = edges_df(spark, zipf_random_edges(500, seed=5))
     dag = spark.sparkContext._jsc.sc().dagScheduler()
     j0 = int(dag.nextJobId())
+    ctx = pr.prepare_graph(e)
+    j1 = int(dag.nextJobId())
     res = pr.pagerank_on_context(ctx, mode="reference", tol=1e-9,
                                  checkpoint_dir=str(tmp_path / "cp"))
-    jobs = int(dag.nextJobId()) - j0
+    jobs = int(dag.nextJobId()) - j1
+    assert j1 - j0 <= 2, j1 - j0  # the collapse's count and the kernel
     assert res.iterations > 20
     assert jobs <= 5, jobs
+
+
+# multi-edges summing to positive, zero and negative weights, a
+# self-loop and a vertex with no out-edge, beside a zipf graph
+TRICKY = (zipf_random_edges(300, seed=11)
+          + [(1, 2, 2.0), (1, 2, -0.5), (2, 3, 0.0), (3, 4, -1.0),
+             (7000, 7001, 1.0), (7000, 7001, -1.0), (5, 5, 1.0),
+             (9001, 9002, 1.0)])
+
+
+def _context(ctx: pr.GraphContext) -> dict:
+    """Everything a prepared context holds, its tables as row sets."""
+    return {
+        "n": ctx.n, "n_edges": ctx.n_edges, "has_dangling": ctx.has_dangling,
+        "virtual_vid": ctx.virtual_vid,
+        "trans": {(s, d): p for s, d, p in ctx.trans.collect()},
+        "vertices": set(ctx.vertices.collect()),
+        "dangling": set(ctx.dangling.collect()),
+        "in_strength": None if ctx.in_strength is None
+        else dict(ctx.in_strength.collect()),
+    }
+
+
+@pytest.mark.parametrize("name", ["tricky", "hashed", "empty"])
+def test_prepare_paths_agree(spark, monkeypatch, name):
+    """Both prepares give the same counts, virtual vid and tables, in
+    both modes, including hashed vids near ±2^63 and an empty input."""
+    e = edges_df(spark, [] if name == "empty" else TRICKY)
+    if name == "hashed":
+        e = e.select(F.xxhash64(F.col("src").cast("string")).alias("src"),
+                     F.xxhash64(F.col("dst").cast("string")).alias("dst"),
+                     "weight")
+    for add_virtual in (True, False):
+        got = []
+        for path in PATHS:
+            _use(monkeypatch, path)
+            got.append(_context(pr.prepare_graph(e, add_virtual=add_virtual)))
+        a, b = got
+        for k in ("n", "n_edges", "has_dangling", "virtual_vid", "vertices",
+                  "dangling"):
+            assert a[k] == b[k], (add_virtual, k)
+        assert a["trans"].keys() == b["trans"].keys()
+        assert all(abs(a["trans"][k] - b["trans"][k]) <= 1e-15
+                   for k in a["trans"])
+        if add_virtual:
+            assert a["in_strength"] == pytest.approx(b["in_strength"],
+                                                     rel=1e-12)
+        else:
+            assert a["in_strength"] is b["in_strength"] is None
+        assert (a["virtual_vid"] is None) == (not add_virtual or not a["n"])
+        if name != "empty":
+            assert a["has_dangling"] == (not add_virtual)
+
+
+@pytest.mark.parametrize("path", PATHS)
+def test_virtual_vid_overflow_raises(spark, monkeypatch, path):
+    """A graph whose largest vid is 2^63 - 1 leaves no long for the
+    virtual node: reference mode refuses it; standard mode needs none."""
+    _use(monkeypatch, path)
+    e = edges_df(spark, [(2**63 - 1, 1, 1.0), (1, 2, 1.0)])
+    with pytest.raises(ValueError, match="virtual node"):
+        pr.prepare_graph(e)
+    assert pr.prepare_graph(e, add_virtual=False).n == 3
+
+
+@pytest.mark.parametrize("num_partitions", [None, 5])
+def test_in_task_prepare_past_threshold(spark, monkeypatch, num_partitions):
+    """Collapsed edges at the threshold, but the virtual edges push
+    trans past it: the in-task prepare lays trans out for the
+    distributed loop (hash-partitioned on src, persisted, into
+    ``num_partitions`` or at least 4 partitions), which runs it and
+    matches the oracle."""
+    triples = zipf_random_edges(300, seed=11)
+    sums: dict = {}
+    for s, d, w in triples:
+        sums[s, d] = sums.get((s, d), 0.0) + w
+    monkeypatch.setattr(in_task, "IN_TASK_MAX_EDGES",
+                        sum(w > 0 for w in sums.values()))
+    ctx = pr.prepare_graph(edges_df(spark, triples), num_partitions)
+    assert not ctx.vertices.is_cached  # a view: the in-task prepare ran
+    assert ctx.n_edges > in_task.IN_TASK_MAX_EDGES
+    assert ctx.trans.is_cached
+    assert ctx.partitions == (num_partitions or ctx.partitions) >= 4
+    layout = ctx.trans._jdf.queryExecution().executedPlan() \
+        .outputPartitioning().toString()
+    assert layout.startswith("hashpartitioning(src") \
+        and layout.endswith(f", {ctx.partitions})"), layout
+    distributed, loops = pr._distributed, []
+    monkeypatch.setattr(pr, "_distributed",
+                        lambda *a: loops.append(1) or distributed(*a))
+    res = pr.pagerank_on_context(ctx, mode="reference", tol=1e-9,
+                                 max_iter=1000)
+    assert loops == [1]
+    want = oracle.reference_pagerank(triples, tol=1e-9, max_iter=1000)
+    _assert_close(_ranks(res), want, 1e-6)
+
+
+def test_in_task_context_save_load(spark, tmp_path, monkeypatch):
+    """An in-task context saves and loads to the same tables."""
+    _use(monkeypatch, "in_task")
+    ctx = pr.prepare_graph(edges_df(spark, TRICKY))
+    ctx.save(str(tmp_path / "g"))
+    loaded = pr.GraphContext.load(spark, str(tmp_path / "g"))
+    assert loaded.partitions == ctx.partitions
+    assert _context(loaded) == _context(ctx)
