@@ -129,7 +129,6 @@ def main(argv: list[str] | None = None) -> int:
             events, coin, state, ranks, link_rate=args.link_rate,
             deadline_ts=args.deadline_ts, reward_pool=args.reward_pool,
             tol=args.tol, max_iter=args.max_iter, chunk=args.chunk,
-            metric_every=args.chunk,
             exact_distances=not args.approx_distances,
             warm_start=args.warm_start,
             symbol_parallelism=args.symbol_parallelism,

@@ -94,7 +94,7 @@ def connected_components(
         .select("vid", F.col("vid").alias("component"), F.lit(1.0).alias("diff"))
     )
 
-    def step(state: DataFrame, i: int) -> DataFrame:
+    def step(state: DataFrame, i: int, _carried=None) -> DataFrame:
         cur = state.select("vid", "component")
         # neighbor min
         nbr = (
@@ -132,9 +132,8 @@ def connected_components(
             )
         )
 
-    def metric(state: DataFrame) -> float:
-        # number of labels still changing
-        return float(state.filter(F.col("diff") != 0).count())
+    # number of labels still changing
+    metric = F.count(F.when(F.col("diff") != 0, 1))
 
     with shuffle_partitions_pinned(spark, p):
         res = run_loop(spark, labels, step, metric, tol=1.0, max_iter=max_iter)

@@ -91,7 +91,7 @@ def label_propagation(
         .select("vid", F.col("vid").alias("label"), F.lit(1.0).alias("diff"))
     )
 
-    def step(state: DataFrame, i: int) -> DataFrame:
+    def step(state: DataFrame, i: int, _carried=None) -> DataFrame:
         cur = state.select("vid", "label")
         votes = (
             und.join(cur.withColumnRenamed("vid", "src"), "src")
@@ -119,8 +119,7 @@ def label_propagation(
             )
         )
 
-    def metric(state: DataFrame) -> float:
-        return float(state.filter(F.col("diff") != 0).count())
+    metric = F.count(F.when(F.col("diff") != 0, 1))
 
     with shuffle_partitions_pinned(spark, p):
         res = run_loop(spark, labels, step, metric, tol=1.0, max_iter=max_iter)

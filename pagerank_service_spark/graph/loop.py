@@ -3,12 +3,17 @@
 Loops are outside Catalyst, so this is the one place the engine
 hand-manages physical concerns (SURVEY.md §4):
 
-* **lineage truncation** — each iteration's state DataFrame is
-  ``localCheckpoint(eager=True)``'d; without this the plan grows by one
-  join per iteration and the optimizer re-analyzes an ever-deeper tree
-  (and executors eventually OOM on task binaries). Old checkpoint blocks
-  are dereferenced each iteration and reclaimed by Spark's
-  ContextCleaner / MEMORY_AND_DISK eviction.
+* **lineage truncation** — each materialization's state DataFrame is
+  ``localCheckpoint``'d by one job, which also returns the convergence
+  metric and the next step's carry as observed metrics; without the
+  checkpoint the plan grows by one join per iteration and the
+  optimizer re-analyzes an ever-deeper tree (and executors
+  eventually OOM on task binaries). Old checkpoint blocks are
+  dereferenced each iteration and reclaimed by Spark's ContextCleaner /
+  MEMORY_AND_DISK eviction.
+* **code-stable scalars** — a value carried from one materialization
+  into the next step's plan enters through ``scalar``, so whole-stage
+  codegen compiles each stage once per loop shape, not once per value.
 * **AQE pinning** — AQE re-plans (and re-coalesces) every iteration,
   flapping the partitioning the loop relies on; we toggle it off for the
   duration of the loop and restore afterwards. Runtime conf only — the
@@ -17,7 +22,8 @@ hand-manages physical concerns (SURVEY.md §4):
   state is also written to reliable storage (parquet) with a JSON
   manifest carrying iteration number, convergence metric, wall time and
   per-partition lineage (rows + key range + checksum per partition), so
-  a killed job resumes exactly (north-rule requirement).
+  a killed job resumes exactly (north-rule requirement); the state read
+  back on resume is checked against that lineage.
 """
 
 from __future__ import annotations
@@ -25,10 +31,12 @@ from __future__ import annotations
 import json
 import os
 import time
-from collections.abc import Callable
+from collections.abc import Callable, Sequence
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import (
+    Column, DataFrame, Observation, SparkSession, functions as F,
+)
 
 
 @dataclass
@@ -39,8 +47,8 @@ class LoopResult:
     wall_secs: float
     metric_history: list[float] = field(default_factory=list)
     # wall seconds per materialization (one entry per chunk of `chunk`
-    # iterations) — lets benches separate steady-state iteration cost
-    # from first-iteration JIT/warmup
+    # iterations, its one job included) — lets benches separate
+    # steady-state iteration cost from first-iteration JIT/warmup
     chunk_secs: list[float] = field(default_factory=list)
 
 
@@ -99,6 +107,11 @@ def graph_partitions(spark: SparkSession, n_rows: int,
     return max(4, min(conf, n_rows // rows_per_partition + 1))
 
 
+def _key_checksum(key: str) -> Column:
+    """An order-free checksum of a key column: the sum of its hashes."""
+    return F.sum(F.xxhash64(key).cast("decimal(38,0)"))
+
+
 def partition_lineage(df: DataFrame, key: str) -> list[dict]:
     """Per-partition lineage records for the checkpoint manifest."""
     rows = (
@@ -107,9 +120,7 @@ def partition_lineage(df: DataFrame, key: str) -> list[dict]:
             F.count(F.lit(1)).alias("rows"),
             F.min(key).alias("min_key"),
             F.max(key).alias("max_key"),
-            F.sum(F.xxhash64(key).cast("decimal(38,0)")).cast("string").alias(
-                "key_checksum"
-            ),
+            _key_checksum(key).cast("string").alias("key_checksum"),
         )
         .collect()
     )
@@ -130,7 +141,7 @@ def write_checkpoint(
     state.write.mode("overwrite").parquet(path)
     manifest = {
         "iteration": iteration,
-        # fixed-iteration mode has no metric; keep the manifest valid JSON
+        # a run of no iterations has no metric; keep the manifest valid JSON
         "metric": metric if math.isfinite(metric) else None,
         "path": path,
         "wall_time": time.time(),
@@ -144,13 +155,19 @@ def write_checkpoint(
 
 
 def read_checkpoint(
-    spark: SparkSession, checkpoint_dir: str, expect: dict | None = None
+    spark: SparkSession, checkpoint_dir: str, expect: dict | None = None,
+    key: str = "vid",
 ) -> tuple[DataFrame, dict] | None:
     """The latest checkpoint's state and manifest, or None if there is none.
 
     Every ``expect`` key must equal the manifest's value: a checkpoint
     written for another graph or configuration raises ``ValueError``
-    instead of resuming from foreign state."""
+    instead of resuming from foreign state. The state read back must
+    also match the manifest's lineage: its row count and the sum of its
+    ``key`` checksums against the totals of the per-partition records
+    (totals, because partition ids change when parquet is read back).
+    A mismatch, such as a lost part file, raises ``ValueError``; the
+    check costs one job, on resume only."""
     mf = os.path.join(checkpoint_dir, "MANIFEST.json")
     if not os.path.exists(mf):
         return None
@@ -162,14 +179,38 @@ def read_checkpoint(
         raise ValueError(
             f"checkpoint in {checkpoint_dir} was written for a different "
             f"run; (manifest, current) per field: {bad}")
-    return spark.read.parquet(manifest["path"]), manifest
+    state = spark.read.parquet(manifest["path"])
+    parts = manifest["partitions"]
+    want = (sum(int(p["rows"]) for p in parts),
+            sum(int(p["key_checksum"]) for p in parts))
+    with aqe_disabled(spark):
+        row = state.agg(F.count(F.lit(1)), _key_checksum(key)).first()
+    got = (int(row[0]), int(row[1] or 0))
+    if got != want:
+        raise ValueError(
+            f"checkpoint {manifest['path']} does not match its manifest: "
+            f"(rows, key checksum) read {got}, written {want}")
+    return state, manifest
+
+
+def scalar(x: float) -> Column:
+    """The driver-side double ``x`` as a column whose generated code is
+    the same for every value of ``x``.
+
+    ``F.lit(x)`` is inlined into whole-stage generated code as a
+    constant, so a loop that feeds a new value each iteration compiles
+    the stage afresh each time. An array literal is kept out of the code
+    (in the stage's references), and indexing it by a non-foldable
+    expression of the ``vid`` column stops constant folding from turning
+    it back into a double literal."""
+    return F.element_at(F.lit([float(x)]), (F.col("vid") * 0 + 1).cast("int"))
 
 
 def run_loop(
     spark: SparkSession,
     state: DataFrame,
-    step: Callable[[DataFrame, int], DataFrame],
-    metric_fn: Callable[[DataFrame], float],
+    step: Callable[[DataFrame, int, float | None], DataFrame],
+    metric: Column,
     tol: float,
     max_iter: int,
     key: str = "vid",
@@ -178,78 +219,77 @@ def run_loop(
     start_iteration: int = 0,
     checkpoint_extra: dict | None = None,
     chunk: int = 1,
-    metric_every: int = 1,
+    carry: Column | None = None,
+    checkpoint_cols: Sequence[str] | None = None,
 ) -> LoopResult:
-    """Iterate ``state = step(state, i)`` until ``metric_fn(state) < tol``.
+    """Iterate ``state = step(state, i, carried)`` until ``metric < tol``.
 
-    ``step`` must be LAZY (pure plan construction, no actions) and return
-    a DataFrame containing the metric column(s) ``metric_fn`` reads.
+    ``step`` must be LAZY (pure plan construction, no actions).
+    ``metric`` and ``carry`` are aggregate expressions over the state a
+    step returns: the convergence metric, and an optional scalar the
+    next step needs (e.g. PageRank's dangling mass). ``carried`` is the
+    previous materialization's ``carry`` value, or None for the first
+    step of a run and for the chained steps inside a chunk, which must
+    compute it in their plan. A step that puts ``carried`` into its
+    plan should do so through ``scalar``.
 
-    ``chunk`` chains that many steps into ONE job before materializing
-    (localCheckpoint) — the driver-side barrier (job scheduling, stage
-    sync, checkpoint write) is a fixed serial cost per materialization,
-    so amortizing it over k chained shuffles is what makes the loop's
-    wall time scale with cores instead of with iteration count.
-    Convergence is checked at chunk boundaries: the loop may overshoot
-    convergence by up to chunk-1 iterations (strictly more converged).
+    Each materialization is ONE Spark job, in both modes: an eager
+    ``localCheckpoint`` of the chunk's state with ``metric`` and
+    ``carry`` observed (``DataFrame.observe``), so the job that
+    computes and caches the state also aggregates them as the rows go
+    by, without an aggregate stage of its own. Convergence is checked,
+    and the metric recorded, at every materialization. ``chunk_secs``
+    holds each materialization's wall time, that job included.
+    Checkpoints (every ``checkpoint_every`` iterations and at the end)
+    hold the state's ``checkpoint_cols``, or all of it.
 
-    CAUTION: a step that references its input state more than once (the
-    PageRank step uses it three times: message join, prev-rank channel,
-    dangling semi-join) produces a chained LOGICAL plan of ~refs^chunk
-    nodes — execution dedups via exchange reuse, but driver-side
-    analysis/codegen does not, so cost explodes past chunk≈3 (measured:
-    chunk=3 wins 1.6x at 1.2M edges; chunk=6 is 5x SLOWER; on tiny test
-    graphs, where the driver IS the bottleneck, any chunk>1 loses).
-
-    ``metric_every`` runs the convergence job only every k-th
-    materialization — the metric is a full extra job per iteration, so
-    on fast-converging loops this trades up to k-1 extra (strictly
-    convergence-improving) iterations for k-fold fewer metric jobs.
-
-    Job budget (round-6): in convergence mode (tol > 0) the chunk's
-    ``localCheckpoint`` is LAZY and the next metric job materializes it
-    — one driver job per metric point instead of one per chunk plus one
-    per metric point (per-job scheduling latency is the serial floor of
-    small-graph loops). Chunks between metric points stay pending as
-    LogicalRDD leaves (plan depth per chunk is unchanged) and are
-    computed, and their checkpoint blocks written, by that one job.
-    Fixed-iteration mode (tol <= 0) keeps the EAGER per-chunk
-    materialization: the scaling bench times exactly those per-chunk
-    jobs (``chunk_secs``), which laziness would reduce to plan-build
-    time. In convergence mode ``chunk_secs`` is therefore lumpy — lazy
-    chunks near zero, the metric chunk carrying their work.
+    ``chunk`` chains that many steps before materializing; the loop may
+    overshoot convergence by up to chunk-1 iterations (strictly more
+    converged). It was meant to amortize the per-materialization
+    barrier (job scheduling, stage sync, checkpoint write) over k
+    chained shuffles, and no longer does. A chained step has no carry,
+    so on a graph with dangling vertices each one pays PageRank's
+    in-plan dangling-mass job. And a step that references its input
+    state r times (PageRank's: twice, message join and prev-rank
+    channel, three times without a carry) chains a LOGICAL plan of
+    ~r^chunk nodes: execution dedups it via exchange reuse, but
+    driver-side analysis and codegen do not. Measured at 588,871
+    transition rows (reference mode, no dangling vertices, tol 1e-6,
+    30 iterations, ``local[4]``, median of 9): chunk=3 ran the loop in
+    16.5 s with 10 jobs, chunk=1 in 8.7 s with 30.
     """
     t0 = time.time()
     history: list[float] = []
     chunk_secs: list[float] = []
-    metric = float("inf")
+    metric_value = float("inf")
+    carried = None
+    aggs = [metric.alias("metric")]
+    if carry is not None:
+        aggs.append(carry.alias("carry"))
     i = start_iteration
     with aqe_disabled(spark):
         while i < max_iter:
             tc = time.time()
             n_steps = min(chunk, max_iter - i)
-            new_state = state
             for j in range(n_steps):
-                new_state = step(new_state, i + j)
-            new_state = new_state.localCheckpoint(eager=(tol <= 0))
+                state = step(state, i + j, carried if j == 0 else None)
+            # the one job: computes and caches the state, and returns
+            # its metric and the next step's carry
+            seen = Observation()
+            state = state.observe(seen, *aggs).localCheckpoint(eager=True)
+            row = seen.get
+            carried = row["carry"] if carry is not None else None
             i += n_steps
-            run_metric = tol > 0 and (
-                (i // max(chunk, 1)) % metric_every == 0 or i >= max_iter
-            )
-            if run_metric:
-                metric = metric_fn(new_state)
-                history.append(metric)
+            # an aggregate over no rows (an empty state) is null
+            metric_value = float(row["metric"] or 0.0)
+            history.append(metric_value)
             chunk_secs.append(time.time() - tc)
-            # tol<=0 = fixed-iteration mode: convergence can never fire,
-            # so skip the per-chunk metric job entirely
-            state = new_state
-            if checkpoint_dir and (
-                i % checkpoint_every < n_steps or i >= max_iter
-            ):
-                write_checkpoint(state, checkpoint_dir, i, metric, key,
-                                 checkpoint_extra)
-            if metric < tol:
+            done = metric_value < tol or i >= max_iter
+            if checkpoint_dir and (done or i % checkpoint_every < n_steps):
+                write_checkpoint(
+                    state.select(*checkpoint_cols) if checkpoint_cols else state,
+                    checkpoint_dir, i, metric_value, key, checkpoint_extra)
+            if done:
                 break
-    if checkpoint_dir:
-        write_checkpoint(state, checkpoint_dir, i, metric, key, checkpoint_extra)
-    return LoopResult(state, i, metric, time.time() - t0, history, chunk_secs)
+    return LoopResult(state, i, metric_value, time.time() - t0, history,
+                      chunk_secs)

@@ -32,7 +32,7 @@ transition table:
   runs each iteration as an ``np.bincount`` scatter plus the dangling
   term, checks the diff every iteration and runs the reference
   post-pass in the same task. That is one Spark job where the
-  distributed loop pays about two per iteration.
+  distributed loop pays one per iteration.
 * **distributed**, above it. The transition table ``trans(src, dst,
   p)`` is computed ONCE (collapse multi-edges -> out-degree normalize),
   hash-repartitioned on ``src`` and persisted — the per-iteration join
@@ -41,17 +41,25 @@ transition table:
   ``trans ⋈ ranks on src`` -> partial map-side aggregation ->
   ``groupBy(dst).sum`` — hub-dst skew is absorbed by partial
   aggregation; an explicit two-stage salted aggregate (``salt=k``) is
-  available for pathological hubs. Dangling mass and the convergence
-  metric are single-row aggregates broadcast back through literals —
-  never a driver-side loop over collected rows; lineage, AQE and
-  checkpointing are handled by graph/loop.py.
+  available for pathological hubs. Each vertex's state row carries an
+  ``is_dangling`` flag, set by one join before the loop, so each
+  iteration is ONE job: graph/loop.py's materialization job returns
+  the convergence metric (max diff) and the dangling mass (the flagged
+  ranks' sum) as observed metrics, and the next step takes the mass
+  as a code-stable scalar (``loop.scalar``). Only a step without a
+  carried mass (a run's first, or a chained step inside a ``chunk``)
+  computes it in its plan, as a one-row aggregate crossJoined in (one
+  broadcast job). Lineage, AQE and checkpointing are handled by
+  graph/loop.py.
 
-``chunk``, ``metric_every``, ``salt`` and ``checkpoint_every`` tune only
-the distributed loop. The in-task path checks convergence every
-iteration and writes one checkpoint, at the end, in the same
-``(vid, rank, diff)`` layout and manifest, so either path resumes the
-other's checkpoint. A checkpoint written for a different mode, alpha or
-graph size is refused with ``ValueError`` on both paths.
+``chunk``, ``salt`` and ``checkpoint_every`` tune only the distributed
+loop. ``metric_every`` is accepted and ignored: both paths check
+convergence at every materialization (the distributed loop's one job
+per materialization returns the metric anyway). The in-task path
+writes one checkpoint, at the end, in the same ``(vid, rank, diff)``
+layout and manifest, so either path resumes the other's checkpoint. A
+checkpoint written for a different mode, alpha or graph size is refused
+with ``ValueError`` on both paths.
 """
 
 from __future__ import annotations
@@ -61,7 +69,7 @@ from dataclasses import dataclass, field
 from functools import partial
 
 import numpy as np
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 
 from ..functions.truncate import trunc_py, trunc_udf
 from . import in_task
@@ -71,6 +79,7 @@ from .loop import (
     graph_partitions,
     read_checkpoint,
     run_loop,
+    scalar,
     shuffle_partitions_pinned,
     write_checkpoint,
 )
@@ -425,9 +434,10 @@ def pagerank(
     Returns ranks over the ORIGINAL vertices (virtual node removed and
     post-pass applied in reference mode). Resumable: if
     ``checkpoint_dir`` holds a manifest and ``resume``, the loop
-    continues from the checkpointed iteration. ``salt``, ``chunk``,
-    ``metric_every`` and ``checkpoint_every`` apply only to graphs
-    above ``in_task.IN_TASK_MAX_EDGES`` (module docstring).
+    continues from the checkpointed iteration. ``salt``, ``chunk`` and
+    ``checkpoint_every`` apply only to graphs above
+    ``in_task.IN_TASK_MAX_EDGES``; ``metric_every`` is ignored (module
+    docstring).
 
     ``trunc_digits=14`` runs the reference's exact per-iteration
     truncation regime (network_util.py:604,624-645) for byte-parity
@@ -459,7 +469,7 @@ def pagerank(
     res = pagerank_on_context(
         ctx, mode=mode, alpha=alpha, max_iter=max_iter, tol=tol, salt=salt,
         checkpoint_dir=checkpoint_dir, checkpoint_every=checkpoint_every,
-        resume=resume, chunk=chunk, metric_every=metric_every, unpersist=True,
+        resume=resume, chunk=chunk, unpersist=True,
         trunc_digits=trunc_digits, init_ranks=init_ranks,
     )
     res.wall_secs = time.time() - t0
@@ -486,7 +496,8 @@ def pagerank_on_context(
     directly by the scaling bench so every parallelism level runs the
     loop over byte-identical prepared inputs). Transition tables of at
     most ``in_task.IN_TASK_MAX_EDGES`` rows run in one task, larger ones
-    in the distributed loop (module docstring)."""
+    in the distributed loop (module docstring); ``metric_every`` is
+    ignored."""
     spark = ctx.trans.sparkSession
     a = alpha if alpha is not None else (1.0 if mode == "reference" else 0.85)
     t0 = time.time()
@@ -518,8 +529,7 @@ def pagerank_on_context(
     else:
         out, res = _distributed(
             ctx, mode, a, tol, max_iter, start_iter, resumed, init_ranks,
-            trunc_digits, salt, chunk, metric_every, checkpoint_dir,
-            checkpoint_every, extra)
+            trunc_digits, salt, chunk, checkpoint_dir, checkpoint_every, extra)
 
     if unpersist:
         for df in (ctx.trans, ctx.vertices, ctx.dangling, ctx.in_strength):
@@ -534,12 +544,13 @@ def _distributed(
     ctx: GraphContext, mode: str, a: float, tol: float, max_iter: int,
     start_iter: int, ranks: DataFrame | None, init_ranks: DataFrame | None,
     trunc_digits: int | None, salt: int | None, chunk: int,
-    metric_every: int, checkpoint_dir: str | None, checkpoint_every: int,
-    extra: dict,
+    checkpoint_dir: str | None, checkpoint_every: int, extra: dict,
 ) -> tuple[DataFrame, LoopResult]:
-    """The loop as Spark jobs (graph/loop.py run_loop), one or more per
-    iteration; ``ranks`` is the resumed state, if any. Returns the final
-    ranks and the loop's record."""
+    """The loop as Spark jobs (graph/loop.py run_loop), one per
+    materialization, plus one per step without a carried dangling mass
+    (a run's first, and each chained step inside a ``chunk``); ``ranks``
+    is the resumed state, if any. Returns the final ranks and the loop's
+    record."""
     spark = ctx.trans.sparkSession
     n = ctx.n
     uniform = 1.0 / n
@@ -589,8 +600,46 @@ def _distributed(
         ranks = ctx.vertices.select(
             "vid", F.lit(uniform).alias("rank"), F.lit(1.0).alias("diff")
         )
+    # the state carries each vertex's is_dangling flag, set by this one
+    # join, so the dangling mass is a filtered sum of the state itself:
+    # the materialization's job returns it as the next step's carry,
+    # and no step joins the dangling set. A hash join, not a broadcast:
+    # the first step reads the joined state twice, and each read would
+    # broadcast the dangling set in a job of its own.
+    flag = []
+    if t_has_dangling:
+        ranks = ranks.join(
+            t_dangling.select("vid", F.lit(True).alias("is_dangling"))
+            .hint("shuffle_hash"),
+            "vid", "left",
+        ).select("vid", "rank", "diff",
+                 F.coalesce("is_dangling", F.lit(False)).alias("is_dangling"))
+        flag = ["is_dangling"]
 
-    def step(state: DataFrame, i: int) -> DataFrame:
+    def dangling_mass(agg: DataFrame, state: DataFrame,
+                      carried: float | None) -> tuple[DataFrame, Column]:
+        """``agg`` and the dangling mass of ``state``: the carried value,
+        or, for a step without one (the run's first, or a chained step
+        inside a chunk), a one-row aggregate crossJoined in the plan."""
+        if carried is not None:
+            return agg, scalar(carried)
+        dm = state.filter(F.col("is_dangling")).agg(
+            F.coalesce(F.sum("rank"), F.lit(0.0)).alias("dmass"))
+        return agg.crossJoin(dm), F.col("dmass")
+
+    def reduce(state: DataFrame, msgs: DataFrame, c: Column) -> DataFrame:
+        """messages ∪ prev-rank rows -> one groupBy vid: the new
+        contributions (aggregated by ``c``), the previous rank and the
+        flag travel through the same shuffle."""
+        no_flag = [F.lit(False).alias(f) for f in flag]
+        msgs = msgs.select("vid", "c", F.lit(0.0).alias("pv"), *no_flag)
+        prev = state.select("vid", F.lit(0.0).alias("c"),
+                            F.col("rank").alias("pv"), *flag)
+        return msgs.unionByName(prev).groupBy("vid").agg(
+            c.alias("c"), F.sum("pv").alias("pv"),
+            *[F.max(f).alias(f) for f in flag])
+
+    def step(state: DataFrame, i: int, carried: float | None) -> DataFrame:
         # Fully LAZY step (no driver actions) so run_loop can chain
         # `chunk` iterations into one job. ONE shuffle per iteration in
         # steady state: messages ∪ prev-rank rows -> groupBy vid. The
@@ -602,31 +651,20 @@ def _distributed(
         # the cached trans scan and the state scan — PLANS.md). The
         # previous rank travels through the same aggregation as a second
         # sum channel, so no per-iteration vertex-table join and no
-        # separate diff join. Dangling mass is a 1-row aggregate
-        # attached via crossJoin (broadcast of one row), never a
-        # .collect().
-        cur = state.select("vid", "rank")
-        msgs = _messages(ctx, cur, salt).select(
-            F.col("dst").alias("vid"), "c", F.lit(0.0).alias("pv")
-        )
-        prev = cur.select("vid", F.lit(0.0).alias("c"), F.col("rank").alias("pv"))
-        agg = (
-            msgs.unionByName(prev)
-            .groupBy("vid")
-            .agg(F.sum("c").alias("c"), F.sum("pv").alias("pv"))
-        )
-        if ctx.has_dangling:
-            dm = (
-                cur.join(ctx.dangling, "vid", "left_semi")
-                .agg(F.coalesce(F.sum("rank"), F.lit(0.0)).alias("dmass"))
-            )
-            agg = agg.crossJoin(dm)
-            base = a * F.col("dmass") * uniform + (1.0 - a) * uniform
+        # separate diff join. With a carry the dangling mass is a
+        # code-stable scalar, so a steady-state step has no other
+        # exchange.
+        msgs = _messages(ctx, state.select("vid", "rank"), salt)
+        agg = reduce(state, msgs.withColumnRenamed("dst", "vid"), F.sum("c"))
+        if t_has_dangling:
+            agg, dmass = dangling_mass(agg, state, carried)
+            base = a * dmass * uniform + (1.0 - a) * uniform
         else:
             base = F.lit((1.0 - a) * uniform)
         rank = a * F.col("c") + base
         return agg.select(
-            "vid", rank.alias("rank"), F.abs(rank - F.col("pv")).alias("diff")
+            "vid", rank.alias("rank"), F.abs(rank - F.col("pv")).alias("diff"),
+            *flag,
         )
 
     if trunc_digits:
@@ -637,38 +675,23 @@ def _distributed(
         #   x_new = trunc(step1 + step2 + step3)
         s3 = trunc_py(trunc_py(1.0 - a, trunc_digits) / n, trunc_digits)
 
-        def step(state: DataFrame, i: int) -> DataFrame:  # noqa: F811
-            cur = state.select("vid", "rank")
-            pre = cur.select(F.col("vid").alias("src"),
-                             _tr(F.lit(a) * F.col("rank")).alias("r1"))
+        def step(state: DataFrame, i: int,  # noqa: F811
+                 carried: float | None) -> DataFrame:
+            pre = state.select(F.col("vid").alias("src"),
+                               _tr(F.lit(a) * F.col("rank")).alias("r1"))
             msgs = trans.join(pre, "src").select(
-                F.col("dst").alias("vid"),
-                (F.col("p") * F.col("r1")).alias("c"),
-                F.lit(0.0).alias("pv"),
-            )
-            prev = cur.select("vid", F.lit(0.0).alias("c"),
-                              F.col("rank").alias("pv"))
-            agg = (
-                msgs.unionByName(prev)
-                .groupBy("vid")
-                .agg(_tr(F.sum("c")).alias("c"), F.sum("pv").alias("pv"))
-            )
+                F.col("dst").alias("vid"), (F.col("p") * F.col("r1")).alias("c"))
+            agg = reduce(state, msgs, _tr(F.sum("c")))
             if t_has_dangling:
-                dm = (
-                    cur.join(t_dangling, "vid", "left_semi")
-                    .agg(F.coalesce(F.sum("rank"), F.lit(0.0)).alias("dmass"))
-                )
-                agg = agg.crossJoin(dm)
-                step2 = _tr(F.lit(uniform) * (F.lit(a) * F.col("dmass")))
+                agg, dmass = dangling_mass(agg, state, carried)
+                step2 = _tr(F.lit(uniform) * (F.lit(a) * dmass))
             else:
                 step2 = F.lit(0.0)
             rank = _tr(F.col("c") + step2 + F.lit(s3))
             return agg.select(
-                "vid", rank.alias("rank"), F.abs(rank - F.col("pv")).alias("diff")
+                "vid", rank.alias("rank"), F.abs(rank - F.col("pv")).alias("diff"),
+                *flag,
             )
-
-    def metric(state: DataFrame) -> float:
-        return state.agg(F.max("diff")).first()[0]
 
     # pin the loop's exchanges (rank re-hash + dst aggregation) to the
     # trans partition count so they align with the persisted structure
@@ -676,10 +699,14 @@ def _distributed(
     loop_p = ctx.partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
     with shuffle_partitions_pinned(spark, loop_p):
         res = run_loop(
-            spark, ranks, step, metric, tol, max_iter,
+            spark, ranks, step, F.max("diff"), tol, max_iter,
             checkpoint_dir=checkpoint_dir, checkpoint_every=checkpoint_every,
-            start_iteration=start_iter, chunk=chunk, metric_every=metric_every,
-            checkpoint_extra=extra,
+            start_iteration=start_iter, chunk=chunk, checkpoint_extra=extra,
+            carry=F.coalesce(
+                F.sum(F.when(F.col("is_dangling"), F.col("rank"))),
+                F.lit(0.0)) if flag else None,
+            # checkpoints keep the layout both paths resume
+            checkpoint_cols=("vid", "rank", "diff"),
         )
     out = res.state.select("vid", "rank")
 
@@ -830,10 +857,10 @@ def _reference_postpass(ranks: DataFrame, ctx: GraphContext) -> DataFrame:
     """network_util.py:655-719: delete virtual node, redistribute its rank
     proportionally, normalize, add 0.5*in_w/sum_in_w bonus, normalize.
 
-    ONE lazy plan, one job: the four scalar aggregates (virtual rank,
-    two normalizers, in-strength total) ride as 1-row crossJoins
-    (broadcast of one row — the pattern the loop already uses for
-    dangling mass) instead of four sequential ``.first()`` driver jobs.
+    ONE lazy plan: the four scalar aggregates (virtual rank, two
+    normalizers, in-strength total) ride as 1-row crossJoins (broadcast
+    of one row, as a loop step without a carried dangling mass does)
+    instead of four sequential ``.first()`` driver jobs.
     Per-element arithmetic and each aggregation's tree are unchanged;
     only the job boundaries go — the caller's localCheckpoint
     materializes the whole chain in a single job (round-6 job-budget

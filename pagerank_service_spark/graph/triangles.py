@@ -92,13 +92,18 @@ def _orient(canon: DataFrame) -> DataFrame:
     )
 
 
-def _count_from_oriented(e: DataFrame, p: int) -> tuple[DataFrame, DataFrame]:
-    """(tris, per_vertex) from an oriented (u, v, dv) edge table. The
-    wedge's endpoints are ordered by (deg, vid) — the orientation key —
-    so a closing edge between y and z can only be oriented y -> z and
-    the semi-join probes the oriented table itself (no 2x union)."""
+def _count_from_oriented(e: DataFrame, p: int) -> tuple[int, DataFrame]:
+    """(total, per_vertex) from an oriented (u, v, dv) edge table, with
+    ``per_vertex`` materialized as a checkpoint scan. The wedge's
+    endpoints are ordered by (deg, vid) — the orientation key — so a
+    closing edge between y and z can only be oriented y -> z and the
+    semi-join probes the oriented table itself (no 2x union).
+
+    Both materializations, and the persist of the triangles they read,
+    run at ``p`` shuffle partitions and with AQE off (AQE would run each
+    exchange under them as a job of its own)."""
     spark = e.sparkSession
-    wedges = (  # heavy exchanges below run under the graph-sized p
+    wedges = (
         e.alias("e1")
         .join(e.alias("e2"), F.col("e1.u") == F.col("e2.u"))
         .filter(
@@ -110,9 +115,9 @@ def _count_from_oriented(e: DataFrame, p: int) -> tuple[DataFrame, DataFrame]:
         )
     )
     closing = e.select(F.col("u").alias("y"), F.col("v").alias("z"))
-    tris = wedges.join(closing, ["y", "z"], "left_semi").persist()
-    with shuffle_partitions_pinned(spark, p):
-        tris.count()  # materialize the wedge join at graph-sized shuffles
+    with aqe_disabled(spark), shuffle_partitions_pinned(spark, p):
+        tris = wedges.join(closing, ["y", "z"], "left_semi").persist()
+        total = tris.count()
     per_vertex = (
         tris.select(F.explode(F.array("x", "y", "z")).alias("vid"))
         .groupBy("vid")
@@ -128,7 +133,15 @@ def _count_from_oriented(e: DataFrame, p: int) -> tuple[DataFrame, DataFrame]:
     per_vertex = all_v.join(per_vertex, "vid", "left").select(
         "vid", F.coalesce("triangles", F.lit(0)).alias("triangles")
     )
-    return tris, per_vertex
+    # materialize per_vertex WHILE tris/e are still cached: the returned
+    # DataFrame is then a checkpoint scan. Without this, every caller
+    # action (e.g. a sink write or the bench's count) re-executed the
+    # whole canonicalize + orient + wedge-join pipeline from the source
+    # (round-6 plan audit).
+    with aqe_disabled(spark), shuffle_partitions_pinned(spark, p):
+        per_vertex = per_vertex.localCheckpoint(eager=True)
+    tris.unpersist()
+    return total, per_vertex
 
 
 def triangle_counts(edges: DataFrame, num_partitions: int | None = None,
@@ -149,24 +162,15 @@ def triangle_counts(edges: DataFrame, num_partitions: int | None = None,
     with aqe_disabled(spark):  # as in components.connected_components
         canon = canon.persist()
         p = num_partitions or graph_partitions(spark, canon.count())
-    # LAZY: the wedge-join materialization inside _count_from_oriented
-    # computes the orient + repartition and populates the cache (was an
-    # eager count barrier — round-6 job-budget trim; canon stays cached
-    # until after the count, so a cache miss never re-runs the
-    # canonicalizing distinct)
-    e = _orient(canon).repartition(p, "u").persist()
-    tris, per_vertex = _count_from_oriented(e, p)
-    total = tris.count()
-    # materialize per_vertex WHILE tris/e are still cached: the returned
-    # DataFrame is then a checkpoint scan. Without this, every caller
-    # action (e.g. a sink write or the bench's count) re-executed the
-    # whole canonicalize + orient + wedge-join pipeline from the source
-    # — the count paid the full DAG twice (round-6 plan audit).
-    with shuffle_partitions_pinned(spark, p):
-        per_vertex = per_vertex.localCheckpoint(eager=True)
+        # LAZY: the wedge-join materialization inside
+        # _count_from_oriented computes the orient + repartition and
+        # populates the cache (was an eager count barrier — round-6
+        # job-budget trim; canon stays cached until after the count, so
+        # a cache miss never re-runs the canonicalizing distinct)
+        e = _orient(canon).repartition(p, "u").persist()
+    total, per_vertex = _count_from_oriented(e, p)
     canon.unpersist()
     e.unpersist()
-    tris.unpersist()
     return TriangleResult(per_vertex, total, time.time() - t0)
 
 
@@ -262,10 +266,5 @@ def triangle_counts_prepared(spark: SparkSession, table: str,
     e = spark.table(table)
     with aqe_disabled(spark):  # as in components.connected_components
         p = num_partitions or graph_partitions(spark, e.count())
-    tris, per_vertex = _count_from_oriented(e, p)
-    total = tris.count()
-    with shuffle_partitions_pinned(spark, p):
-        # same double-execution guard as triangle_counts
-        per_vertex = per_vertex.localCheckpoint(eager=True)
-    tris.unpersist()
+    total, per_vertex = _count_from_oriented(e, p)
     return TriangleResult(per_vertex, total, time.time() - t0)

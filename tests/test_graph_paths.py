@@ -121,6 +121,20 @@ def test_cc_max_iter_bailout(spark, monkeypatch):
     assert jobs[1] <= 8, jobs
 
 
+def test_distributed_triangles_job_budget(spark, monkeypatch):
+    """The distributed triangle count on chain10, collect included,
+    takes 10 jobs: it counts the triangles once, and its sizing count,
+    wedge-join count and per-vertex checkpoint run with AQE off, which
+    would run each exchange under them as a job of its own."""
+    _use(monkeypatch, "distributed")
+    e = edges_df(spark, fixture_edges("chain10"))
+    dag = spark.sparkContext._jsc.sc().dagScheduler()
+    j0 = int(dag.nextJobId())
+    assert _record(triangle_counts, e)[0] == 0
+    jobs = int(dag.nextJobId()) - j0
+    assert jobs <= 10, jobs
+
+
 def test_in_task_job_budget(spark, monkeypatch):
     """Each small-graph call submits at most 3 Spark jobs, however many
     rounds it runs. Counted as perfbench/spans.py counts them: every job

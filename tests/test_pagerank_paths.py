@@ -83,7 +83,7 @@ def test_checkpoint_resumes_across_paths(spark, tmp_path, monkeypatch,
 def test_in_task_job_budget(spark, tmp_path, monkeypatch):
     """A small graph's preparation is two Spark jobs and its whole run,
     checkpoint included, a handful, however many iterations it takes
-    (the distributed loop submits about two per iteration). Counted as
+    (the distributed loop submits one per iteration). Counted as
     perfbench/spans.py counts them: every job id the DAG scheduler hands
     out."""
     _use(monkeypatch, "in_task")
@@ -98,6 +98,69 @@ def test_in_task_job_budget(spark, tmp_path, monkeypatch):
     assert j1 - j0 <= 2, j1 - j0  # the collapse's count and the kernel
     assert res.iterations > 20
     assert jobs <= 5, jobs
+
+
+# a hub with 39 dangling leaves and 40 in-links beside a zipf graph
+HUB = ([(0, i, 1.0) for i in range(1, 40)] + [(i, 0, 1.0) for i in range(40, 80)]
+       + [(s + 100, d + 100, w) for s, d, w in zipf_random_edges(300, seed=3)])
+
+
+def test_distributed_loop_one_job_per_iteration(spark, monkeypatch):
+    """The distributed loop submits one job per iteration after its
+    first, in fixed and in convergence mode, and a warm run compiles no
+    new code although every dangling mass it carries past the first
+    run's 20 iterations is new. Ranks match the oracle in both modes."""
+    _use(monkeypatch, "distributed")
+    ctx = pr.prepare_graph(edges_df(spark, HUB), add_virtual=False)
+    assert ctx.has_dangling
+    dag = spark.sparkContext._jsc.sc().dagScheduler()
+    compiles = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics \
+        .METRIC_COMPILATION_TIME()
+    j0 = int(dag.nextJobId())
+    fixed = pr.pagerank_on_context(ctx, mode="standard", tol=0.0,
+                                   max_iter=20, unpersist=False)
+    jobs = int(dag.nextJobId()) - j0
+    assert fixed.iterations == 20
+    assert jobs <= 22, jobs
+    j0, c0 = int(dag.nextJobId()), compiles.getCount()
+    conv = pr.pagerank_on_context(ctx, mode="standard", tol=1e-9,
+                                  max_iter=500)
+    jobs = int(dag.nextJobId()) - j0
+    assert conv.converged and conv.iterations > 20
+    assert jobs <= conv.iterations + 2, (jobs, conv.iterations)
+    assert compiles.getCount() - c0 == 0
+    _assert_close(_ranks(fixed),
+                  oracle.standard_pagerank(HUB, tol=0.0, max_iter=20), 1e-12)
+    _assert_close(_ranks(conv),
+                  oracle.standard_pagerank(HUB, tol=1e-9, max_iter=500), 1e-9)
+
+
+def test_distributed_trunc_with_dangling_matches_oracle(spark, monkeypatch):
+    """Trunc mode on the distributed path, over a graph whose dangling
+    mass the loop carries from one iteration to the next."""
+    _use(monkeypatch, "distributed")
+    res = pr.pagerank(edges_df(spark, HUB), mode="standard", tol=0.0,
+                      max_iter=8, trunc_digits=14)
+    want = oracle.standard_pagerank(HUB, tol=0.0, max_iter=8, trunc_digits=14)
+    _assert_close(_ranks(res), want, 1e-13)
+
+
+def test_resume_refuses_checkpoint_with_lost_part(spark, tmp_path,
+                                                  monkeypatch):
+    """A checkpoint that lost a part file no longer matches its
+    manifest's lineage: resuming from it raises instead of running on
+    with vertices missing."""
+    _use(monkeypatch, "distributed")
+    triples = zipf_random_edges(300, seed=11)
+    cp = tmp_path / "cp"
+    pr.pagerank(edges_df(spark, triples), mode="reference", tol=1e-9,
+                max_iter=3, checkpoint_dir=str(cp))
+    parts = sorted((cp / "iter_000003").glob("part-*.parquet"))
+    assert len(parts) > 1
+    parts[0].unlink()
+    with pytest.raises(ValueError, match="does not match its manifest"):
+        pr.pagerank(edges_df(spark, triples), mode="reference", tol=1e-9,
+                    checkpoint_dir=str(cp))
 
 
 # multi-edges summing to positive, zero and negative weights, a
