@@ -88,12 +88,6 @@ def headline_pagerank(spark, sf: float, repeats: int | None = None) -> dict:
     edges = edges.persist()
     n_edges = edges.count()
     t2 = time.time()
-    # chunk=3: three lazy steps per materialization — the driver-side
-    # barrier (job scheduling + localCheckpoint sync) is the serial
-    # floor per job, so amortizing it over 3 chained shuffles measured
-    # ~1.6x faster than one-job-per-iteration at this scale (convergence
-    # still checked every 3 iterations, same as the old metric_every=3;
-    # chunk=6 regressed — the 6-deep chained plan overwhelms codegen).
     # The graph is prepared ONCE; the convergence loop runs `repeats`
     # times and the BEST loop is reported — this VM's hypervisor
     # CPU-steal spikes make single timings meaningless (observed 2-5x).
@@ -102,7 +96,7 @@ def headline_pagerank(spark, sf: float, repeats: int | None = None) -> dict:
     for i in range(repeats):
         last = i == repeats - 1
         r = pagerank_on_context(ctx, mode="reference", tol=1e-6, max_iter=200,
-                                chunk=3, metric_every=1, unpersist=last)
+                                unpersist=last)
         if res is None or r.loop_secs < res.loop_secs:
             res = r
     bench_pagerank_secs = time.time() - t2  # ALL repeat loops together
@@ -318,7 +312,7 @@ def daily_bench(sf: float, n_days: int = 5) -> dict:
         t0 = time.time()
         r = run_daily_lifecycle(ev, coin, state, ranks,
                                 deadline_ts=1_700_000_000 + (day + 1) * 86_400,
-                                tol=1e-6, max_iter=60, chunk=3, metric_every=3)
+                                tol=1e-6, max_iter=60)
         n_contracts = r.state.count()
         days.append({"day": day, "wall_secs": round(time.time() - t0, 2),
                      "contracts": n_contracts, "vertices": r.n_vertices,
@@ -339,8 +333,7 @@ def daily_bench(sf: float, n_days: int = 5) -> dict:
         t0 = time.time()
         rw = run_daily_lifecycle(ev_last, coin, st, rk,
                                  deadline_ts=1_700_000_000 + n_days * 86_400,
-                                 tol=1e-6, max_iter=60, chunk=3,
-                                 metric_every=3, warm_start=True)
+                                 tol=1e-6, max_iter=60, warm_start=True)
         rw.state.count()
         warm = {"day": n_days - 1, "wall_secs": round(time.time() - t0, 2),
                 "iterations": rw.iterations,
@@ -394,8 +387,7 @@ def symbol_overlap_bench(sf: float, n_symbols: int = 6) -> dict:
         r = run_daily_lifecycle(evs, coin, empty_state(spark),
                                 spark.createDataFrame([], "user string, rank double"),
                                 deadline_ts=1_700_000_000 + 86_400,
-                                tol=1e-6, max_iter=40, chunk=3, metric_every=3,
-                                symbol_parallelism=par)
+                                tol=1e-6, max_iter=40, symbol_parallelism=par)
         assert len(r.per_symbol) == n_symbols
         out[label] = round(time.time() - t0, 2)
     out["overlap_ratio"] = round(out["overlapped_day_secs"]

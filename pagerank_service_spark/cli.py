@@ -68,7 +68,6 @@ def main(argv: list[str] | None = None) -> int:
     dl.add_argument("--reward-pool", type=float, default=10000.0)
     dl.add_argument("--tol", type=float, default=1e-9)
     dl.add_argument("--max-iter", type=int, default=1000)
-    dl.add_argument("--chunk", type=int, default=3)
     dl.add_argument("--approx-distances", action="store_true",
                     help="skip the per-pair BFS feeder (new pairs use "
                          "default_distance)")
@@ -128,7 +127,7 @@ def main(argv: list[str] | None = None) -> int:
         r = run_daily_lifecycle(
             events, coin, state, ranks, link_rate=args.link_rate,
             deadline_ts=args.deadline_ts, reward_pool=args.reward_pool,
-            tol=args.tol, max_iter=args.max_iter, chunk=args.chunk,
+            tol=args.tol, max_iter=args.max_iter,
             exact_distances=not args.approx_distances,
             warm_start=args.warm_start,
             symbol_parallelism=args.symbol_parallelism,

@@ -135,8 +135,8 @@ def connected_components(
     # number of labels still changing
     metric = F.count(F.when(F.col("diff") != 0, 1))
 
-    with shuffle_partitions_pinned(spark, p):
-        res = run_loop(spark, labels, step, metric, tol=1.0, max_iter=max_iter)
+    res = run_loop(spark, labels, step, metric, tol=1.0, max_iter=max_iter,
+                   partitions=p)
     und0.unpersist()
     und.unpersist()
     return ComponentsResult(res.state.select("vid", "component"),

@@ -42,12 +42,7 @@ import numpy as np
 from pyspark.sql import DataFrame, functions as F
 
 from . import in_task
-from .loop import (
-    aqe_disabled,
-    graph_partitions,
-    run_loop,
-    shuffle_partitions_pinned,
-)
+from .loop import aqe_disabled, graph_partitions, run_loop
 
 
 @dataclass
@@ -121,8 +116,8 @@ def label_propagation(
 
     metric = F.count(F.when(F.col("diff") != 0, 1))
 
-    with shuffle_partitions_pinned(spark, p):
-        res = run_loop(spark, labels, step, metric, tol=1.0, max_iter=max_iter)
+    res = run_loop(spark, labels, step, metric, tol=1.0, max_iter=max_iter,
+                   partitions=p)
     und0.unpersist()
     und.unpersist()
     return LabelPropResult(res.state.select("vid", "label"),

@@ -3,7 +3,7 @@
 Loops are outside Catalyst, so this is the one place the engine
 hand-manages physical concerns (SURVEY.md §4):
 
-* **lineage truncation** — each materialization's state DataFrame is
+* **lineage truncation** — each iteration's state DataFrame is
   ``localCheckpoint``'d by one job, which also returns the convergence
   metric and the next step's carry as observed metrics; without the
   checkpoint the plan grows by one join per iteration and the
@@ -14,10 +14,12 @@ hand-manages physical concerns (SURVEY.md §4):
 * **code-stable scalars** — a value carried from one materialization
   into the next step's plan enters through ``scalar``, so whole-stage
   codegen compiles each stage once per loop shape, not once per value.
-* **AQE pinning** — AQE re-plans (and re-coalesces) every iteration,
-  flapping the partitioning the loop relies on; we toggle it off for the
-  duration of the loop and restore afterwards. Runtime conf only — the
-  relational operators outside loops keep AQE's skew-join handling.
+* **AQE and shuffle-partition pinning** — AQE re-plans (and
+  re-coalesces) every iteration, flapping the partitioning the loop
+  relies on; the loop toggles it off, and pins the shuffle partitions
+  to the graph's partition count, for its duration and restores both
+  afterwards. Runtime conf only — the relational operators outside
+  loops keep AQE's skew-join handling.
 * **resumable checkpoints** — every ``checkpoint_every`` iterations the
   state is also written to reliable storage (parquet) with a JSON
   manifest carrying iteration number, convergence metric, wall time and
@@ -46,10 +48,9 @@ class LoopResult:
     metric: float
     wall_secs: float
     metric_history: list[float] = field(default_factory=list)
-    # wall seconds per materialization (one entry per chunk of `chunk`
-    # iterations, its one job included) — lets benches separate
-    # steady-state iteration cost from first-iteration JIT/warmup
-    chunk_secs: list[float] = field(default_factory=list)
+    # wall seconds per iteration, its one job included — lets benches
+    # separate steady-state iteration cost from first-iteration JIT/warmup
+    iter_secs: list[float] = field(default_factory=list)
 
 
 class aqe_disabled:
@@ -213,12 +214,12 @@ def run_loop(
     metric: Column,
     tol: float,
     max_iter: int,
+    partitions: int,
     key: str = "vid",
     checkpoint_dir: str | None = None,
     checkpoint_every: int = 10,
     start_iteration: int = 0,
     checkpoint_extra: dict | None = None,
-    chunk: int = 1,
     carry: Column | None = None,
     checkpoint_cols: Sequence[str] | None = None,
 ) -> LoopResult:
@@ -227,69 +228,59 @@ def run_loop(
     ``step`` must be LAZY (pure plan construction, no actions).
     ``metric`` and ``carry`` are aggregate expressions over the state a
     step returns: the convergence metric, and an optional scalar the
-    next step needs (e.g. PageRank's dangling mass). ``carried`` is the
-    previous materialization's ``carry`` value, or None for the first
-    step of a run and for the chained steps inside a chunk, which must
-    compute it in their plan. A step that puts ``carried`` into its
-    plan should do so through ``scalar``.
+    next step needs (e.g. PageRank's dangling mass). With a ``carry``,
+    the input state is materialized once before the loop, with the
+    carry observed, so every step gets the carry of the state it reads
+    as a float ``carried``; without one, ``carried`` is None. A step
+    that puts ``carried`` into its plan should do so through ``scalar``.
 
-    Each materialization is ONE Spark job, in both modes: an eager
-    ``localCheckpoint`` of the chunk's state with ``metric`` and
-    ``carry`` observed (``DataFrame.observe``), so the job that
-    computes and caches the state also aggregates them as the rows go
-    by, without an aggregate stage of its own. Convergence is checked,
-    and the metric recorded, at every materialization. ``chunk_secs``
-    holds each materialization's wall time, that job included.
-    Checkpoints (every ``checkpoint_every`` iterations and at the end)
-    hold the state's ``checkpoint_cols``, or all of it.
-
-    ``chunk`` chains that many steps before materializing; the loop may
-    overshoot convergence by up to chunk-1 iterations (strictly more
-    converged). It was meant to amortize the per-materialization
-    barrier (job scheduling, stage sync, checkpoint write) over k
-    chained shuffles, and no longer does. A chained step has no carry,
-    so on a graph with dangling vertices each one pays PageRank's
-    in-plan dangling-mass job. And a step that references its input
-    state r times (PageRank's: twice, message join and prev-rank
-    channel, three times without a carry) chains a LOGICAL plan of
-    ~r^chunk nodes: execution dedups it via exchange reuse, but
-    driver-side analysis and codegen do not. Measured at 588,871
-    transition rows (reference mode, no dangling vertices, tol 1e-6,
-    30 iterations, ``local[4]``, median of 9): chunk=3 ran the loop in
-    16.5 s with 10 jobs, chunk=1 in 8.7 s with 30.
+    Each iteration is ONE Spark job: an eager ``localCheckpoint`` of the
+    step's state with ``metric`` and ``carry`` observed
+    (``DataFrame.observe``), so the job that computes and caches the
+    state also aggregates them as the rows go by, without an aggregate
+    stage of its own. Convergence is checked, and the metric recorded,
+    at every iteration; ``iter_secs`` holds each iteration's wall time,
+    that job included. Checkpoints (every ``checkpoint_every``
+    iterations and at the end) hold the state's ``checkpoint_cols``, or
+    all of it. The loop's exchanges run with AQE off and at
+    ``partitions`` shuffle partitions (the graph's layout, so they align
+    with the persisted structure).
     """
     t0 = time.time()
     history: list[float] = []
-    chunk_secs: list[float] = []
+    iter_secs: list[float] = []
     metric_value = float("inf")
     carried = None
     aggs = [metric.alias("metric")]
     if carry is not None:
         aggs.append(carry.alias("carry"))
+
+    def materialize(df: DataFrame) -> tuple[DataFrame, dict]:
+        # the one job: computes and caches the state, and returns its
+        # metric and the next step's carry
+        seen = Observation()
+        return df.observe(seen, *aggs).localCheckpoint(eager=True), seen.get
+
     i = start_iteration
-    with aqe_disabled(spark):
+    with aqe_disabled(spark), shuffle_partitions_pinned(spark, partitions):
+        if carry is not None:
+            state, row = materialize(state)
+            carried = row["carry"]
         while i < max_iter:
             tc = time.time()
-            n_steps = min(chunk, max_iter - i)
-            for j in range(n_steps):
-                state = step(state, i + j, carried if j == 0 else None)
-            # the one job: computes and caches the state, and returns
-            # its metric and the next step's carry
-            seen = Observation()
-            state = state.observe(seen, *aggs).localCheckpoint(eager=True)
-            row = seen.get
-            carried = row["carry"] if carry is not None else None
-            i += n_steps
+            state, row = materialize(step(state, i, carried))
+            carried = row.get("carry")
+            i += 1
             # an aggregate over no rows (an empty state) is null
             metric_value = float(row["metric"] or 0.0)
             history.append(metric_value)
-            chunk_secs.append(time.time() - tc)
+            iter_secs.append(time.time() - tc)
             done = metric_value < tol or i >= max_iter
-            if checkpoint_dir and (done or i % checkpoint_every < n_steps):
+            if checkpoint_dir and (done or i % checkpoint_every == 0):
                 write_checkpoint(
                     state.select(*checkpoint_cols) if checkpoint_cols else state,
                     checkpoint_dir, i, metric_value, key, checkpoint_extra)
             if done:
                 break
     return LoopResult(state, i, metric_value, time.time() - t0, history,
-                      chunk_secs)
+                      iter_secs)

@@ -46,18 +46,15 @@ transition table:
   iteration is ONE job: graph/loop.py's materialization job returns
   the convergence metric (max diff) and the dangling mass (the flagged
   ranks' sum) as observed metrics, and the next step takes the mass
-  as a code-stable scalar (``loop.scalar``). Only a step without a
-  carried mass (a run's first, or a chained step inside a ``chunk``)
-  computes it in its plan, as a one-row aggregate crossJoined in (one
-  broadcast job). Lineage, AQE and checkpointing are handled by
-  graph/loop.py.
+  as a code-stable scalar (``loop.scalar``). The first step takes the
+  mass of the input state, which the loop materializes once before it
+  starts. Lineage, AQE, shuffle partitions and checkpointing are
+  handled by graph/loop.py.
 
-``chunk``, ``salt`` and ``checkpoint_every`` tune only the distributed
-loop. ``metric_every`` is accepted and ignored: both paths check
-convergence at every materialization (the distributed loop's one job
-per materialization returns the metric anyway). The in-task path
-writes one checkpoint, at the end, in the same ``(vid, rank, diff)``
-layout and manifest, so either path resumes the other's checkpoint. A
+``salt`` and ``checkpoint_every`` tune only the distributed loop. Both
+paths check convergence at every iteration. The in-task path writes
+one checkpoint, at the end, in the same ``(vid, rank, diff)`` layout
+and manifest, so either path resumes the other's checkpoint. A
 checkpoint written for a different mode, alpha or graph size is refused
 with ``ValueError`` on both paths.
 """
@@ -80,7 +77,6 @@ from .loop import (
     read_checkpoint,
     run_loop,
     scalar,
-    shuffle_partitions_pinned,
     write_checkpoint,
 )
 
@@ -387,10 +383,9 @@ def _messages(ctx: GraphContext, ranks: DataFrame,
     """
     rank_side = ranks.withColumnRenamed("vid", "src")
     # Always hash-join (round-6 A/B): the r05 code broadcast rank
-    # vectors under 200k vids, but a chunked loop
-    # then pays `chunk` driver-side broadcast builds per materialization
-    # — the headline graph (150k vids) ran 1.36x faster steady-state
-    # with the hint (1.44s -> 1.06s per 3-iter chunk). The hash join is
+    # vectors under 200k vids, which pays a driver-side broadcast build
+    # every iteration — the headline graph (150k vids) ran 1.36x faster
+    # steady-state with the hint. The hash join is
     # exchange-free on BOTH sides in steady state (trans is cached
     # hash(src,p); the checkpointed state preserves the groupBy's
     # hash(vid,p)), and the build side (ranks) equals the broadcast
@@ -424,8 +419,6 @@ def pagerank(
     checkpoint_dir: str | None = None,
     checkpoint_every: int = 20,
     resume: bool = True,
-    chunk: int = 1,
-    metric_every: int = 1,
     trunc_digits: int | None = None,
     init_ranks: DataFrame | None = None,
 ) -> PageRankResult:
@@ -434,10 +427,9 @@ def pagerank(
     Returns ranks over the ORIGINAL vertices (virtual node removed and
     post-pass applied in reference mode). Resumable: if
     ``checkpoint_dir`` holds a manifest and ``resume``, the loop
-    continues from the checkpointed iteration. ``salt``, ``chunk`` and
+    continues from the checkpointed iteration. ``salt`` and
     ``checkpoint_every`` apply only to graphs above
-    ``in_task.IN_TASK_MAX_EDGES``; ``metric_every`` is ignored (module
-    docstring).
+    ``in_task.IN_TASK_MAX_EDGES`` (module docstring).
 
     ``trunc_digits=14`` runs the reference's exact per-iteration
     truncation regime (network_util.py:604,624-645) for byte-parity
@@ -469,7 +461,7 @@ def pagerank(
     res = pagerank_on_context(
         ctx, mode=mode, alpha=alpha, max_iter=max_iter, tol=tol, salt=salt,
         checkpoint_dir=checkpoint_dir, checkpoint_every=checkpoint_every,
-        resume=resume, chunk=chunk, unpersist=True,
+        resume=resume, unpersist=True,
         trunc_digits=trunc_digits, init_ranks=init_ranks,
     )
     res.wall_secs = time.time() - t0
@@ -486,8 +478,6 @@ def pagerank_on_context(
     checkpoint_dir: str | None = None,
     checkpoint_every: int = 20,
     resume: bool = True,
-    chunk: int = 1,
-    metric_every: int = 1,
     unpersist: bool = True,
     trunc_digits: int | None = None,
     init_ranks: DataFrame | None = None,
@@ -496,8 +486,7 @@ def pagerank_on_context(
     directly by the scaling bench so every parallelism level runs the
     loop over byte-identical prepared inputs). Transition tables of at
     most ``in_task.IN_TASK_MAX_EDGES`` rows run in one task, larger ones
-    in the distributed loop (module docstring); ``metric_every`` is
-    ignored."""
+    in the distributed loop (module docstring)."""
     spark = ctx.trans.sparkSession
     a = alpha if alpha is not None else (1.0 if mode == "reference" else 0.85)
     t0 = time.time()
@@ -529,7 +518,7 @@ def pagerank_on_context(
     else:
         out, res = _distributed(
             ctx, mode, a, tol, max_iter, start_iter, resumed, init_ranks,
-            trunc_digits, salt, chunk, checkpoint_dir, checkpoint_every, extra)
+            trunc_digits, salt, checkpoint_dir, checkpoint_every, extra)
 
     if unpersist:
         for df in (ctx.trans, ctx.vertices, ctx.dangling, ctx.in_strength):
@@ -537,20 +526,19 @@ def pagerank_on_context(
                 df.unpersist()
     return PageRankResult(out, res.iterations, res.metric, time.time() - t0,
                           res.wall_secs, ctx.n, ctx.n_edges, res.metric_history,
-                          res.chunk_secs, converged=res.metric < tol)
+                          res.iter_secs, converged=res.metric < tol)
 
 
 def _distributed(
     ctx: GraphContext, mode: str, a: float, tol: float, max_iter: int,
     start_iter: int, ranks: DataFrame | None, init_ranks: DataFrame | None,
-    trunc_digits: int | None, salt: int | None, chunk: int,
+    trunc_digits: int | None, salt: int | None,
     checkpoint_dir: str | None, checkpoint_every: int, extra: dict,
 ) -> tuple[DataFrame, LoopResult]:
     """The loop as Spark jobs (graph/loop.py run_loop), one per
-    materialization, plus one per step without a carried dangling mass
-    (a run's first, and each chained step inside a ``chunk``); ``ranks``
-    is the resumed state, if any. Returns the final ranks and the loop's
-    record."""
+    iteration, plus one that materializes the input state when it
+    carries a dangling mass; ``ranks`` is the resumed state, if any.
+    Returns the final ranks and the loop's record."""
     spark = ctx.trans.sparkSession
     n = ctx.n
     uniform = 1.0 / n
@@ -616,17 +604,6 @@ def _distributed(
                  F.coalesce("is_dangling", F.lit(False)).alias("is_dangling"))
         flag = ["is_dangling"]
 
-    def dangling_mass(agg: DataFrame, state: DataFrame,
-                      carried: float | None) -> tuple[DataFrame, Column]:
-        """``agg`` and the dangling mass of ``state``: the carried value,
-        or, for a step without one (the run's first, or a chained step
-        inside a chunk), a one-row aggregate crossJoined in the plan."""
-        if carried is not None:
-            return agg, scalar(carried)
-        dm = state.filter(F.col("is_dangling")).agg(
-            F.coalesce(F.sum("rank"), F.lit(0.0)).alias("dmass"))
-        return agg.crossJoin(dm), F.col("dmass")
-
     def reduce(state: DataFrame, msgs: DataFrame, c: Column) -> DataFrame:
         """messages ∪ prev-rank rows -> one groupBy vid: the new
         contributions (aggregated by ``c``), the previous rank and the
@@ -640,8 +617,8 @@ def _distributed(
             *[F.max(f).alias(f) for f in flag])
 
     def step(state: DataFrame, i: int, carried: float | None) -> DataFrame:
-        # Fully LAZY step (no driver actions) so run_loop can chain
-        # `chunk` iterations into one job. ONE shuffle per iteration in
+        # Fully LAZY step (no driver actions): run_loop materializes it
+        # in one job. ONE shuffle per iteration in
         # steady state: messages ∪ prev-rank rows -> groupBy vid. The
         # rank-side edge join is exchange-free because localCheckpoint
         # materializes into a LogicalRDD that PRESERVES the groupBy's
@@ -651,14 +628,12 @@ def _distributed(
         # the cached trans scan and the state scan — PLANS.md). The
         # previous rank travels through the same aggregation as a second
         # sum channel, so no per-iteration vertex-table join and no
-        # separate diff join. With a carry the dangling mass is a
-        # code-stable scalar, so a steady-state step has no other
-        # exchange.
+        # separate diff join. The carried dangling mass is a
+        # code-stable scalar, so a step has no other exchange.
         msgs = _messages(ctx, state.select("vid", "rank"), salt)
         agg = reduce(state, msgs.withColumnRenamed("dst", "vid"), F.sum("c"))
         if t_has_dangling:
-            agg, dmass = dangling_mass(agg, state, carried)
-            base = a * dmass * uniform + (1.0 - a) * uniform
+            base = a * scalar(carried) * uniform + (1.0 - a) * uniform
         else:
             base = F.lit((1.0 - a) * uniform)
         rank = a * F.col("c") + base
@@ -683,8 +658,7 @@ def _distributed(
                 F.col("dst").alias("vid"), (F.col("p") * F.col("r1")).alias("c"))
             agg = reduce(state, msgs, _tr(F.sum("c")))
             if t_has_dangling:
-                agg, dmass = dangling_mass(agg, state, carried)
-                step2 = _tr(F.lit(uniform) * (F.lit(a) * dmass))
+                step2 = _tr(F.lit(uniform) * (F.lit(a) * scalar(carried)))
             else:
                 step2 = F.lit(0.0)
             rank = _tr(F.col("c") + step2 + F.lit(s3))
@@ -693,21 +667,21 @@ def _distributed(
                 *flag,
             )
 
-    # pin the loop's exchanges (rank re-hash + dst aggregation) to the
+    # the loop's exchanges (rank re-hash + dst aggregation) run at the
     # trans partition count so they align with the persisted structure
     # instead of the session-wide (relational-sized) shuffle partitions
-    loop_p = ctx.partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
-    with shuffle_partitions_pinned(spark, loop_p):
-        res = run_loop(
-            spark, ranks, step, F.max("diff"), tol, max_iter,
-            checkpoint_dir=checkpoint_dir, checkpoint_every=checkpoint_every,
-            start_iteration=start_iter, chunk=chunk, checkpoint_extra=extra,
-            carry=F.coalesce(
-                F.sum(F.when(F.col("is_dangling"), F.col("rank"))),
-                F.lit(0.0)) if flag else None,
-            # checkpoints keep the layout both paths resume
-            checkpoint_cols=("vid", "rank", "diff"),
-        )
+    res = run_loop(
+        spark, ranks, step, F.max("diff"), tol, max_iter,
+        partitions=ctx.partitions
+        or int(spark.conf.get("spark.sql.shuffle.partitions")),
+        checkpoint_dir=checkpoint_dir, checkpoint_every=checkpoint_every,
+        start_iteration=start_iter, checkpoint_extra=extra,
+        carry=F.coalesce(
+            F.sum(F.when(F.col("is_dangling"), F.col("rank"))),
+            F.lit(0.0)) if flag else None,
+        # checkpoints keep the layout both paths resume
+        checkpoint_cols=("vid", "rank", "diff"),
+    )
     out = res.state.select("vid", "rank")
 
     if mode == "reference":
@@ -716,8 +690,10 @@ def _distributed(
         # every caller action (the lifecycle's rank write, the registry
         # queries' count) re-executed the in_strength lineage — all the
         # way back to the source edge extraction once ctx was
-        # unpersisted below (round-6 plan audit).
-        out = _reference_postpass(out, ctx).localCheckpoint(eager=True)
+        # unpersisted below (round-6 plan audit). With AQE off: on, each
+        # of its nested one-row crossJoins runs as a job of its own.
+        with aqe_disabled(spark):
+            out = _reference_postpass(out, ctx).localCheckpoint(eager=True)
     if trunc_digits:
         trans.unpersist()
         t_dangling.unpersist()
@@ -859,13 +835,12 @@ def _reference_postpass(ranks: DataFrame, ctx: GraphContext) -> DataFrame:
 
     ONE lazy plan: the four scalar aggregates (virtual rank, two
     normalizers, in-strength total) ride as 1-row crossJoins (broadcast
-    of one row, as a loop step without a carried dangling mass does)
-    instead of four sequential ``.first()`` driver jobs.
+    of one row) instead of four sequential ``.first()`` driver jobs.
     Per-element arithmetic and each aggregation's tree are unchanged;
-    only the job boundaries go — the caller's localCheckpoint
-    materializes the whole chain in a single job (round-6 job-budget
-    trim; the daily lifecycle pays this post-pass once per day and once
-    per alone-symbol)."""
+    only the job boundaries go — the caller's one localCheckpoint, with
+    AQE off, materializes the whole chain (10 jobs on a 500-edge graph,
+    the nested broadcasts included; the daily lifecycle pays this
+    post-pass once per day and once per alone-symbol)."""
     vpr_d = ranks.filter(F.col("vid") == ctx.virtual_vid).agg(
         F.coalesce(F.sum("rank"), F.lit(0.0)).alias("_vpr"))
     # pr += pr/(1-vpr) * vpr  ==  pr / (1-vpr)

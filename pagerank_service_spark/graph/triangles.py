@@ -25,7 +25,7 @@ task (graph/in_task.py) as NumPy: the same canonical pairs and the same
 (deg, vid) orientation, wedges closed by ``np.searchsorted`` on the
 sorted oriented-edge keys, per-vertex counts by ``np.bincount`` over the
 three corners. Wedges are enumerated a bounded number at a time, so the
-task holds O(E + chunk) on hub-heavy graphs. That is one Spark job
+task holds O(E + ``_WEDGE_CHUNK``) on hub-heavy graphs. That is one Spark job
 where the distributed path pays a handful of shuffles and
 materializations. ``num_partitions`` and ``assume_canonical`` tune only
 the distributed path, which runs above the threshold; the prepared-

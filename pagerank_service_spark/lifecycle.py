@@ -595,6 +595,10 @@ def run_daily_lifecycle(
     PageRank (the reference's load_contract_and_user recompute,
     network_util.py:794-805 — same values, structural win).
 
+    ``chunk`` and ``metric_every`` are accepted and ignored, so that
+    existing callers still bind: the PageRank loop runs one step per
+    job and checks convergence at every iteration.
+
     ``warm_start=True`` seeds today's power iteration from yesterday's
     rank checkpoint (pagerank ``init_ranks``): the day-over-day graph
     differs only by the day's additions/removals and the re-priced
@@ -627,8 +631,8 @@ def run_daily_lifecycle(
     with aqe_disabled(events.sparkSession):
         return _run_daily_lifecycle(
             events, coin_info, state, old_ranks, link_rate, deadline_ts,
-            reward_pool, tol, max_iter, chunk, metric_every,
-            exact_distances, pagerank, work_dir, warm_start,
+            reward_pool, tol, max_iter, exact_distances, pagerank,
+            work_dir, warm_start,
             symbol_parallelism,
         )
 
@@ -645,8 +649,8 @@ def _day_boundary(df, work_dir: str, name: str):
 
 def _run_daily_lifecycle(
     events, coin_info, state, old_ranks, link_rate, deadline_ts,
-    reward_pool, tol, max_iter, chunk, metric_every, exact_distances,
-    pagerank, work_dir, warm_start=False, symbol_parallelism=None,
+    reward_pool, tol, max_iter, exact_distances, pagerank, work_dir,
+    warm_start=False, symbol_parallelism=None,
 ) -> DayResult:
     import tempfile
     import uuid
@@ -726,7 +730,7 @@ def _run_daily_lifecycle(
         init = old_ranks.select(
             F.xxhash64(F.lower("user")).alias("vid"), "rank")
     res = pagerank(enc, mode="reference", tol=tol, max_iter=max_iter,
-                   chunk=chunk, metric_every=metric_every, init_ranks=init)
+                   init_ranks=init)
     ranks = _day_boundary(
         res.ranks.join(verts, "vid").select("addr", "rank"),
         work_dir, "ranks",
@@ -767,8 +771,7 @@ def _run_daily_lifecycle(
                                        default_distance)
             sv, senc = _encode_addrs(se_addr)
             sres = pagerank(senc, mode="reference", tol=tol,
-                            max_iter=max_iter, chunk=chunk,
-                            metric_every=metric_every)
+                            max_iter=max_iter)
             out_path = _os.path.join(work_dir, f"ranks_{sym}")
             sres.ranks.join(sv, "vid").select("addr", "rank").write.mode(
                 "overwrite").parquet(out_path)

@@ -75,8 +75,6 @@ def run_daily(
     max_iter: int = 1000,
     prior_inits: DataFrame | None = None,      # (user_a, user_b, init_value)
     prior_distances: DataFrame | None = None,  # (user_a, user_b, distance)
-    metric_every: int = 1,
-    chunk: int = 1,
 ) -> DailyResult:
     """One logical day. ``prior_inits``/``prior_distances`` are the
     checkpointed per-direction contract state from prior days (the
@@ -100,8 +98,7 @@ def run_daily(
     verts, edges = _encode(edges_addr)
     verts = verts.persist()
 
-    res = pagerank(edges, mode="reference", tol=tol, max_iter=max_iter,
-                   metric_every=metric_every, chunk=chunk)
+    res = pagerank(edges, mode="reference", tol=tol, max_iter=max_iter)
     # materialize at the day boundary: downstream days consume these
     # ranks (in production: the parquet checkpoint) — without cutting
     # lineage here a multi-day chain recompiles every prior day's plan
@@ -123,8 +120,7 @@ def run_daily(
         if sym_edges_addr.isEmpty():
             continue
         sv, se = _encode(sym_edges_addr)
-        sres = pagerank(se, mode="reference", tol=tol, max_iter=max_iter,
-                        metric_every=metric_every, chunk=chunk)
+        sres = pagerank(se, mode="reference", tol=tol, max_iter=max_iter)
         per_symbol[sym] = _ranks_by_addr(sres.ranks, sv).localCheckpoint(eager=True)
 
     # AGF adjustment (calcalate_util.py:149-197): rank *= capped

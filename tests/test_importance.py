@@ -239,7 +239,7 @@ def test_importance_feeds_pagerank(spark):
     )
     # the postpass normalizes at ANY iteration count — no need to run
     # 300 tol=1e-9 iterations to assert sum==1 (was ~190s of suite wall)
-    res = pagerank(e, mode="reference", tol=1e-9, max_iter=24, metric_every=4)
+    res = pagerank(e, mode="reference", tol=1e-9, max_iter=24)
     total = res.ranks.agg(F.sum("rank")).first()[0]
     assert abs(total - 1.0) < 1e-9
     assert res.ranks.count() == verts.count()

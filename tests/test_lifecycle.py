@@ -5,6 +5,7 @@ day flow)."""
 
 from __future__ import annotations
 
+import inspect
 import math
 
 import pytest
@@ -402,3 +403,11 @@ def test_symbol_parallelism_matches_sequential(spark):
         assert set(a) == set(b)
         for k in a:
             assert abs(a[k] - b[k]) < 1e-12, (sym, k)
+
+
+def test_lifecycle_accepts_ignored_loop_keywords():
+    """``chunk`` and ``metric_every`` are retired but still bind: the
+    benchmark's traced lifecycle runs pass both."""
+    inspect.signature(run_daily_lifecycle).bind(
+        None, None, None, None, deadline_ts=T0, tol=1e-6, max_iter=60,
+        chunk=3, metric_every=3, work_dir="/unused")

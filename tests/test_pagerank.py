@@ -198,21 +198,6 @@ def test_cli_pagerank_reports_convergence(spark, tmp_path, capsys):
     assert (code, out["converged"]) == (0, True)
 
 
-def test_chunked_loop_equals_unchunked(spark):
-    """chunk=k chains k lazy steps into one job (the headline bench's
-    fast path) — ranks must be bit-equal to the one-job-per-iteration
-    loop at the same TOTAL iteration count."""
-    triples = fixture_edges("two_cliques_bridge")
-    kw = dict(mode="reference", tol=0.0, max_iter=12)
-    base = pr.pagerank(edges_df(spark, triples), chunk=1, **kw)
-    chunked = pr.pagerank(edges_df(spark, triples), chunk=3, **kw)
-    assert base.iterations == chunked.iterations == 12
-    b = {r["vid"]: r["rank"] for r in base.ranks.collect()}
-    c = {r["vid"]: r["rank"] for r in chunked.ranks.collect()}
-    for k in b:
-        assert abs(b[k] - c[k]) < 1e-15
-
-
 def test_warm_start_converged_seed_and_equality(spark):
     """init_ranks warm start: seeding with the already-converged vector
     reaches tol almost immediately (the fixed point is start-independent,

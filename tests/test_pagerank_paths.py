@@ -45,14 +45,14 @@ def _assert_close(a: dict, b: dict, atol: float) -> None:
 
 @pytest.mark.parametrize("mode", ["reference", "standard"])
 def test_paths_agree(spark, monkeypatch, mode):
-    """Same graph, chunk=1: the same iteration count, the same per-
-    iteration diffs and ranks equal to 1e-12."""
+    """Same graph: the same iteration count, the same per-iteration
+    diffs and ranks equal to 1e-12."""
     triples = zipf_random_edges(500, seed=5)
     runs = []
     for path in PATHS:
         _use(monkeypatch, path)
         runs.append(pr.pagerank(edges_df(spark, triples), mode=mode,
-                                tol=1e-9, max_iter=500, chunk=1))
+                                tol=1e-9, max_iter=500))
     a, b = runs
     assert a.converged and b.converged
     assert a.iterations == b.iterations
@@ -98,6 +98,20 @@ def test_in_task_job_budget(spark, tmp_path, monkeypatch):
     assert j1 - j0 <= 2, j1 - j0  # the collapse's count and the kernel
     assert res.iterations > 20
     assert jobs <= 5, jobs
+
+
+def test_distributed_reference_job_budget(spark, monkeypatch):
+    """A distributed reference-mode run submits one job per iteration
+    and a handful for its post-pass, which runs with AQE off (on, each
+    of its nested one-row crossJoins ran as jobs of its own: 21)."""
+    _use(monkeypatch, "distributed")
+    ctx = pr.prepare_graph(edges_df(spark, zipf_random_edges(500, seed=5)))
+    dag = spark.sparkContext._jsc.sc().dagScheduler()
+    j0 = int(dag.nextJobId())
+    res = pr.pagerank_on_context(ctx, mode="reference", tol=1e-9)
+    jobs = int(dag.nextJobId()) - j0
+    assert res.converged and res.iterations > 20
+    assert jobs <= res.iterations + 10, (jobs, res.iterations)
 
 
 # a hub with 39 dangling leaves and 40 in-links beside a zipf graph

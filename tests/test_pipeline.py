@@ -32,7 +32,7 @@ def test_two_day_lifecycle(spark):
 
     # day 1
     ev1 = spark.createDataFrame(_mk_events(n=50, seed=21), EVENT_SCHEMA)
-    d1 = run_daily(ev1, coin, empty, link_rate=LINK_RATE, max_iter=16, metric_every=4)
+    d1 = run_daily(ev1, coin, empty, link_rate=LINK_RATE, max_iter=16)
     total1 = d1.ranks.agg(F.sum("rank")).first()[0]
     assert abs(total1 - 1.0) < 1e-9
     assert d1.rewards.count() > 0
@@ -44,7 +44,7 @@ def test_two_day_lifecycle(spark):
     # day 2: yesterday's ranks feed the init-value model (S8 restore)
     old = d1.ranks.select(F.col("addr").alias("user"), "rank")
     ev2 = spark.createDataFrame(_mk_events(n=50, seed=22), EVENT_SCHEMA)
-    d2 = run_daily(ev2, coin, old, link_rate=LINK_RATE, max_iter=16, metric_every=4)
+    d2 = run_daily(ev2, coin, old, link_rate=LINK_RATE, max_iter=16)
     total2 = d2.ranks.agg(F.sum("rank")).first()[0]
     assert abs(total2 - 1.0) < 1e-9
     # ranks differ from day 1 (different events + informed init values)
@@ -62,7 +62,7 @@ def test_agf_adjustment_preserves_total(spark):
         [(f"0xUser{i:02d}", 0.5 + 0.2 * i) for i in range(16)], "user string, mult double"
     )
     d = run_daily(ev, coin, empty, link_rate=LINK_RATE,
-                  agf_multipliers=mult, max_iter=16, metric_every=4)
+                  agf_multipliers=mult, max_iter=16)
     assert abs(d.agf_ranks.agg(F.sum("rank")).first()[0] - 1.0) < 1e-9
     # capped multipliers (>1.5 -> 1.0) shift mass but keep distribution valid
     assert d.agf_ranks.filter(F.col("rank") < 0).count() == 0
@@ -84,7 +84,7 @@ def test_cross_day_pair_init_reuse(spark):
     # differently from Q)
     ev1 = spark.createDataFrame([mk(0, "0xP", "0xQ"), mk(1, "0xP", "0xR")],
                                 EVENT_SCHEMA)
-    d1 = run_daily(ev1, coin, empty, link_rate=LINK_RATE, max_iter=12, metric_every=4)
+    d1 = run_daily(ev1, coin, empty, link_rate=LINK_RATE, max_iter=12)
     st = {(r["user_a"], r["user_b"]): r["init_value"]
           for r in d1.contract_inits.collect()}
     assert st[("0xp", "0xq")] == pytest.approx(0.5)
@@ -93,9 +93,9 @@ def test_cross_day_pair_init_reuse(spark):
     # day 2: the same pair P-Q again
     ev2 = spark.createDataFrame([mk(10, "0xP", "0xQ")], EVENT_SCHEMA)
     old = d1.ranks.select(F.col("addr").alias("user"), "rank")
-    with_reuse = run_daily(ev2, coin, old, link_rate=LINK_RATE, max_iter=12, metric_every=4,
+    with_reuse = run_daily(ev2, coin, old, link_rate=LINK_RATE, max_iter=12,
                            prior_inits=d1.contract_inits)
-    without = run_daily(ev2, coin, old, link_rate=LINK_RATE, max_iter=12, metric_every=4)
+    without = run_daily(ev2, coin, old, link_rate=LINK_RATE, max_iter=12)
 
     rw = {r["addr"]: r["rank"] for r in with_reuse.ranks.collect()}
     rn = {r["addr"]: r["rank"] for r in without.ranks.collect()}
