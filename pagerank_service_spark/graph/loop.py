@@ -12,8 +12,10 @@ hand-manages physical concerns (SURVEY.md §4):
   dereferenced each iteration and reclaimed by Spark's ContextCleaner /
   MEMORY_AND_DISK eviction.
 * **code-stable scalars** — a value carried from one materialization
-  into the next step's plan enters through ``scalar``, so whole-stage
-  codegen compiles each stage once per loop shape, not once per value.
+  into the next step's plan is bound as a ``spark.sql`` parameter and
+  read through ``scalar``'s SQL, which keeps it inside an array literal,
+  so whole-stage codegen compiles each stage once per loop shape, not
+  once per value.
 * **AQE and shuffle-partition pinning** — AQE re-plans (and
   re-coalesces) every iteration, flapping the partitioning the loop
   relies on; the loop toggles it off, and pins the shuffle partitions
@@ -33,6 +35,7 @@ from __future__ import annotations
 import json
 import os
 import time
+import uuid
 from collections.abc import Callable, Sequence
 from dataclasses import dataclass, field
 
@@ -93,19 +96,66 @@ class shuffle_partitions_pinned:
         return False
 
 
+class temp_view:
+    """A uniquely named temp view of ``df``, for a loop's SQL steps.
+
+    ``spark.sql``'s DataFrame arguments are temp views that it drops
+    again through ``catalog.dropTempView``, and that call also uncaches
+    the DataFrame the view shows: a cached table passed that way is
+    recomputed from its lineage by every later plan. A loop names its
+    cached tables once instead, and drops the name through the session
+    catalog, which leaves the cache alone."""
+
+    def __init__(self, df: DataFrame):
+        self.df = df
+        self.name = f"_loop_{uuid.uuid4().hex}"
+
+    def __enter__(self) -> str:
+        self.df.createOrReplaceTempView(self.name)
+        return self.name
+
+    def __exit__(self, *exc):
+        self.df.sparkSession._jsparkSession.sessionState().catalog() \
+            .dropTempView(self.name)
+        return False
+
+
 def graph_partitions(spark: SparkSession, n_rows: int,
                      rows_per_partition: int = 75_000) -> int:
-    """Data-sized partition count for a graph structure.
+    """Data-sized partition count for a graph structure, in whole waves
+    of the cluster's task slots.
 
     Iteration latency is task-overhead-bound for small partitions, so
     partitions are sized to ~75k edges (measured optimum on a 1.2M-edge
-    loop: 16 partitions beat both 4 and 64 by ~2x), capped at the
-    session's shuffle partitions — which IS the cluster sizing knob, so
-    at 10^11 edges the cap binds and partitions grow to the multi-
-    million-edge sizes executor memory wants. Floor of 4 avoids
-    single-partition skew."""
+    loop on 32 cores: 16 partitions beat both 4 and 64 by ~2x). A count
+    that does not fit in one wave of task slots is rounded down to whole
+    waves: 7 partitions on 4 slots run as a full wave and a wave of 3,
+    so each iteration waits for two waves and writes 49 shuffle blocks
+    where 4 partitions take one wave and 16 blocks. Rounding down keeps
+    partitions under 2 x ``rows_per_partition`` rows. The count is then
+    floored at 4 (avoids single-partition skew) and capped at the
+    session's shuffle partitions, which IS the cluster sizing knob: at
+    10^11 edges the cap binds and partitions grow to the multi-million-
+    edge sizes executor memory wants. When no executor has registered
+    yet (0 slots), the ~75k-row count stands unrounded.
+
+    The slots are the scheduler's, not ``sc.defaultParallelism``:
+    sessions set ``spark.default.parallelism`` to the shuffle
+    partitions (session.py), so it says nothing about the slots."""
     conf = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    return max(4, min(conf, n_rows // rows_per_partition + 1))
+    p = n_rows // rows_per_partition + 1
+    slots = _task_slots(spark)
+    if 0 < slots < p:
+        p = slots * (p // slots)
+    return max(4, min(conf, p))
+
+
+def _task_slots(spark: SparkSession) -> int:
+    """Tasks the cluster runs at once under the default resource
+    profile (4 at ``local[4]``); 0 before any executor registers."""
+    sc = spark.sparkContext._jsc.sc()
+    return int(sc.maxNumConcurrentTasks(
+        sc.resourceProfileManager().defaultResourceProfile()))
 
 
 def _key_checksum(key: str) -> Column:
@@ -194,17 +244,19 @@ def read_checkpoint(
     return state, manifest
 
 
-def scalar(x: float) -> Column:
-    """The driver-side double ``x`` as a column whose generated code is
-    the same for every value of ``x``.
+def scalar(param: str) -> str:
+    """SQL for the double bound to the named parameter ``:param``, in a
+    form whose generated code is the same for every bound value.
 
-    ``F.lit(x)`` is inlined into whole-stage generated code as a
-    constant, so a loop that feeds a new value each iteration compiles
-    the stage afresh each time. An array literal is kept out of the code
-    (in the stage's references), and indexing it by a non-foldable
-    expression of the ``vid`` column stops constant folding from turning
-    it back into a double literal."""
-    return F.element_at(F.lit([float(x)]), (F.col("vid") * 0 + 1).cast("int"))
+    A double literal is inlined into whole-stage generated code as a
+    constant, so a loop that binds a new value each iteration would
+    compile the stage afresh each time. An array literal is kept out of
+    the code (in the stage's references), and indexing it by a
+    non-foldable expression of the ``vid`` column stops constant
+    folding from turning it back into a double literal. Bind the value
+    as a float through ``spark.sql``'s ``args``, which types it
+    DOUBLE."""
+    return f"element_at(array(:{param}), CAST(vid * 0 + 1 AS INT))"
 
 
 def run_loop(
@@ -232,7 +284,8 @@ def run_loop(
     the input state is materialized once before the loop, with the
     carry observed, so every step gets the carry of the state it reads
     as a float ``carried``; without one, ``carried`` is None. A step
-    that puts ``carried`` into its plan should do so through ``scalar``.
+    that puts ``carried`` into its plan should bind it as a
+    ``spark.sql`` parameter read through ``scalar``.
 
     Each iteration is ONE Spark job: an eager ``localCheckpoint`` of the
     step's state with ``metric`` and ``carry`` observed

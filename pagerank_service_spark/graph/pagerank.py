@@ -35,21 +35,25 @@ transition table:
   distributed loop pays one per iteration.
 * **distributed**, above it. The transition table ``trans(src, dst,
   p)`` is computed ONCE (collapse multi-edges -> out-degree normalize),
-  hash-repartitioned on ``src`` and persisted — the per-iteration join
-  then reuses that exchange, so each iteration shuffles only the rank
-  vector (|V| rows), never the edge table (|E| rows). Contributions:
-  ``trans ⋈ ranks on src`` -> partial map-side aggregation ->
-  ``groupBy(dst).sum`` — hub-dst skew is absorbed by partial
+  hash-repartitioned on ``src`` into whole waves of task slots
+  (graph/loop.py ``graph_partitions``) and persisted — the
+  per-iteration join then reuses that exchange, so each iteration
+  shuffles only the rank vector (|V| rows), never the edge table (|E|
+  rows). Each step is ONE ``spark.sql`` call over one text per run
+  (``_step_sql``): ``trans ⋈ ranks on src`` with a SHUFFLE_HASH hint,
+  unioned with the previous ranks, then one ``GROUP BY vid`` with
+  map-side partial aggregation — hub-dst skew is absorbed by partial
   aggregation; an explicit two-stage salted aggregate (``salt=k``) is
-  available for pathological hubs. Each vertex's state row carries an
+  available for pathological hubs. A steady-state step has one
+  exchange, that ``GROUP BY``. Each vertex's state row carries an
   ``is_dangling`` flag, set by one join before the loop, so each
   iteration is ONE job: graph/loop.py's materialization job returns
   the convergence metric (max diff) and the dangling mass (the flagged
-  ranks' sum) as observed metrics, and the next step takes the mass
-  as a code-stable scalar (``loop.scalar``). The first step takes the
-  mass of the input state, which the loop materializes once before it
-  starts. Lineage, AQE, shuffle partitions and checkpointing are
-  handled by graph/loop.py.
+  ranks' sum) as observed metrics, and the next step binds the mass as
+  a SQL parameter that ``loop.scalar`` keeps out of the generated code.
+  The first step takes the mass of the input state, which the loop
+  materializes once before it starts. Lineage, AQE, shuffle partitions
+  and checkpointing are handled by graph/loop.py.
 
 ``salt`` and ``checkpoint_every`` tune only the distributed loop. Both
 paths check convergence at every iteration. The in-task path writes
@@ -66,7 +70,7 @@ from dataclasses import dataclass, field
 from functools import partial
 
 import numpy as np
-from pyspark.sql import Column, DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..functions.truncate import trunc_py, trunc_udf
 from . import in_task
@@ -77,6 +81,7 @@ from .loop import (
     read_checkpoint,
     run_loop,
     scalar,
+    temp_view,
     write_checkpoint,
 )
 
@@ -204,11 +209,13 @@ def prepare_graph(
     graphs are prepared as Spark jobs (``_prepare_distributed``), whose
     tables are persisted. ``num_partitions`` tunes only the distributed
     layout: ``trans`` hash-partitioned on ``src`` into that many
-    partitions. When not given, that count is sized from the collapsed
-    edge count (graph_partitions: ~75k edges/partition, capped at the
-    session shuffle partitions), repaid every iteration by not
-    scattering a small graph across empty tasks (AQE would do this for
-    one-shot queries but is pinned off in loops).
+    partitions. When not given, that count is sized from the edge count
+    (graph_partitions: ~75k edges a partition, rounded down to whole
+    waves of the cluster's task slots, at least 4 and at most the
+    session's shuffle partitions). It is repaid every iteration: no
+    small graph scattered across empty tasks (AQE would do this for
+    one-shot queries but is pinned off in loops), and no second wave of
+    tasks a few partitions long.
 
     Raises ``ValueError`` in reference mode when the largest vid is
     ``2**63 - 1``: the virtual node's vid would not fit a long.
@@ -370,42 +377,63 @@ def _prepare_kernel(add_virtual: bool, virtual_vid: int | None):
     return kernel
 
 
-def _messages(ctx: GraphContext, ranks: DataFrame,
-              salt: int | None) -> DataFrame:
-    """Per-edge rank contributions (dst, c), optionally pre-aggregated.
+def _step_sql(trans: str, dangling: bool, salt: int | None,
+              trunc: bool) -> str:
+    """The text of one distributed step: ``spark.sql`` over the cached
+    transition table, named by the temp view ``trans``, and the previous
+    state, the argument ``state``. Its doubles are bound as parameters
+    (a bare ``0.85`` in Spark SQL is a DECIMAL): ``:a`` alpha, ``:b0``
+    (1 - alpha) / n, ``:u`` 1 / n, ``:s3`` trunc mode's teleport term
+    and ``:m`` the carried dangling mass, which ``loop.scalar`` keeps
+    out of the generated code.
 
-    The rank side carries a shuffle_hash hint: the cached trans side is
-    already hash-partitioned on src (no exchange), and a hash join
-    avoids both the per-iteration driver-side broadcast the planner
-    would otherwise pick (the rank vector sits under the auto-broadcast
-    threshold but broadcasting it serializes the loop) and the
-    per-iteration re-sort a sort-merge join would do to the edge table.
-    """
-    rank_side = ranks.withColumnRenamed("vid", "src")
-    # Always hash-join (round-6 A/B): the r05 code broadcast rank
-    # vectors under 200k vids, which pays a driver-side broadcast build
-    # every iteration — the headline graph (150k vids) ran 1.36x faster
-    # steady-state with the hint. The hash join is
-    # exchange-free on BOTH sides in steady state (trans is cached
-    # hash(src,p); the checkpointed state preserves the groupBy's
-    # hash(vid,p)), and the build side (ranks) equals the broadcast
-    # build side, so the streamed trans order — and therefore every
-    # float sum — is bit-identical to the old plan.
-    rank_side = rank_side.hint("shuffle_hash")
-    joined = ctx.trans.join(rank_side, "src").select(
-        "dst", (F.col("p") * F.col("rank")).alias("c")
-    )
+    The messages join carries a SHUFFLE_HASH hint on the rank side: the
+    cached trans side is already hash-partitioned on src (no exchange),
+    and a hash join avoids both the per-iteration driver-side broadcast
+    the planner would otherwise pick (the rank vector sits under the
+    auto-broadcast threshold, and broadcasting it serializes the loop)
+    and the per-iteration re-sort a sort-merge join would do to the
+    edge table. With ``salt`` the messages are pre-aggregated per (dst,
+    producing partition % salt), which spreads a pathological hub's rows
+    over ``salt`` reducers. The messages and the previous ranks (a
+    second sum channel, beside the ``is_dangling`` flag when the graph
+    has dangling vertices) then meet in ONE ``GROUP BY vid``, whose
+    result the rank and diff projection reads.
+
+    The rank is ``a*c + ((a*s)*u + b0)`` for ``s`` the dangling mass,
+    the association the in-task kernel and the DuckDB oracles mirror.
+    With ``trunc`` it is network_util.py:624-645's regime, ``_tr``
+    registered as the truncating function: step1 = trunc(alpha * x),
+    the matvec truncated per element, step2 = trunc(u * (alpha * s)),
+    the rank trunc(step1 + step2 + step3)."""
+    mass = scalar("m")
+    flag, no_flag, any_flag = (
+        (", is_dangling", ", false AS is_dangling",
+         ", max(is_dangling) AS is_dangling") if dangling else ("", "", ""))
+    if trunc:
+        r1, total = "_tr(:a * rank)", "_tr(sum(c))"
+        step2 = f"_tr(:u * (:a * {mass}))" if dangling else "0.0D"
+        rank = f"_tr(c + {step2} + :s3)"
+    else:
+        r1, total = "rank", "sum(c)"
+        rank = f":a * c + (:a * {mass} * :u + :b0)" if dangling \
+            else ":a * c + :b0"
+    bucket = f", spark_partition_id() % {int(salt)} AS b" if salt else ""
+    msgs = f"""
+        SELECT /*+ SHUFFLE_HASH(s) */ t.dst AS vid, t.p * s.r AS c{bucket}
+        FROM {trans} t JOIN (SELECT vid AS src, {r1} AS r FROM {{state}}) s
+          ON t.src = s.src"""
     if salt:
-        # explicit two-stage aggregation for hub-dst skew: partial per
-        # (dst, salt bucket keyed on the producing partition), then final
-        # per dst — spreads a pathological hub's rows over `salt` reducers.
-        joined = (
-            joined.withColumn("b", F.spark_partition_id() % salt)
-            .groupBy("dst", "b")
-            .agg(F.sum("c").alias("c"))
-            .drop("b")
-        )
-    return joined
+        msgs = f"SELECT vid, sum(c) AS c FROM ({msgs}) GROUP BY vid, b"
+    return f"""
+    SELECT vid, rank, abs(rank - pv) AS diff{flag}
+    FROM (SELECT vid, {rank} AS rank, pv{flag} FROM (
+      SELECT vid, {total} AS c, sum(pv) AS pv{any_flag}
+      FROM (
+        SELECT vid, c, 0.0D AS pv{no_flag} FROM ({msgs})
+        UNION ALL
+        SELECT vid, 0.0D AS c, rank AS pv{flag} FROM {{state}})
+      GROUP BY vid))"""
 
 
 def pagerank(
@@ -493,13 +521,9 @@ def pagerank_on_context(
     if ctx.n == 0:
         raise ValueError("PageRank of a graph with no vertices")
     if trunc_digits and salt:
-        # the trunc step is its own matvec (it never routes through
-        # _messages), so salt would be silently ignored — refuse instead
-        # of running an unsalted loop the caller didn't ask for
-        raise ValueError(
-            "trunc_digits is only implemented without salt; the "
-            "byte-parity step bypasses _messages"
-        )
+        # the reference's truncation regime sums each vertex's messages
+        # in one aggregate; refuse instead of pre-aggregating them
+        raise ValueError("trunc_digits is only implemented without salt")
     # a checkpoint resumes only onto the graph and settings it was written for
     run_key = {"mode": mode, "alpha": a, "n_vertices": ctx.n,
                "n_edges": ctx.n_edges}
@@ -538,7 +562,15 @@ def _distributed(
     """The loop as Spark jobs (graph/loop.py run_loop), one per
     iteration, plus one that materializes the input state when it
     carries a dangling mass; ``ranks`` is the resumed state, if any.
-    Returns the final ranks and the loop's record."""
+    Returns the final ranks and the loop's record.
+
+    Each step is one ``spark.sql`` call over ``_step_sql``'s text, built
+    once per run, with the previous state as its DataFrame argument
+    and the carried dangling mass as a bound parameter. ``trans`` is
+    named once per run by ``loop.temp_view`` instead of passed as an
+    argument: ``spark.sql`` drops its argument views in a way that
+    uncaches the DataFrames they show. In trunc mode the truncating
+    function is registered once per run as ``_tr``."""
     spark = ctx.trans.sparkSession
     n = ctx.n
     uniform = 1.0 / n
@@ -548,8 +580,9 @@ def _distributed(
     if trunc_digits:
         # byte-parity regime: transition entries truncated ONCE
         # (network_util.py:604) — projection is narrow, so the persisted
-        # hash(src) layout carries through
-        _tr = trunc_udf(trunc_digits)
+        # hash(src) layout carries through. The step's SQL calls the
+        # truncating function by this name.
+        _tr = spark.udf.register("_tr", trunc_udf(trunc_digits))
         trans = trans.select(
             "src", "dst", _tr(F.col("p")).alias("p")).persist()
         trans.count()
@@ -594,7 +627,6 @@ def _distributed(
     # and no step joins the dangling set. A hash join, not a broadcast:
     # the first step reads the joined state twice, and each read would
     # broadcast the dangling set in a job of its own.
-    flag = []
     if t_has_dangling:
         ranks = ranks.join(
             t_dangling.select("vid", F.lit(True).alias("is_dangling"))
@@ -602,86 +634,40 @@ def _distributed(
             "vid", "left",
         ).select("vid", "rank", "diff",
                  F.coalesce("is_dangling", F.lit(False)).alias("is_dangling"))
-        flag = ["is_dangling"]
 
-    def reduce(state: DataFrame, msgs: DataFrame, c: Column) -> DataFrame:
-        """messages ∪ prev-rank rows -> one groupBy vid: the new
-        contributions (aggregated by ``c``), the previous rank and the
-        flag travel through the same shuffle."""
-        no_flag = [F.lit(False).alias(f) for f in flag]
-        msgs = msgs.select("vid", "c", F.lit(0.0).alias("pv"), *no_flag)
-        prev = state.select("vid", F.lit(0.0).alias("c"),
-                            F.col("rank").alias("pv"), *flag)
-        return msgs.unionByName(prev).groupBy("vid").agg(
-            c.alias("c"), F.sum("pv").alias("pv"),
-            *[F.max(f).alias(f) for f in flag])
-
-    def step(state: DataFrame, i: int, carried: float | None) -> DataFrame:
-        # Fully LAZY step (no driver actions): run_loop materializes it
-        # in one job. ONE shuffle per iteration in
-        # steady state: messages ∪ prev-rank rows -> groupBy vid. The
-        # rank-side edge join is exchange-free because localCheckpoint
-        # materializes into a LogicalRDD that PRESERVES the groupBy's
-        # hash(vid, p) output partitioning, which satisfies the join's
-        # hash(src, p) requirement after the rename (verified: the
-        # executed plan of a steady-state step has zero exchanges above
-        # the cached trans scan and the state scan — PLANS.md). The
-        # previous rank travels through the same aggregation as a second
-        # sum channel, so no per-iteration vertex-table join and no
-        # separate diff join. The carried dangling mass is a
-        # code-stable scalar, so a step has no other exchange.
-        msgs = _messages(ctx, state.select("vid", "rank"), salt)
-        agg = reduce(state, msgs.withColumnRenamed("dst", "vid"), F.sum("c"))
-        if t_has_dangling:
-            base = a * scalar(carried) * uniform + (1.0 - a) * uniform
-        else:
-            base = F.lit((1.0 - a) * uniform)
-        rank = a * F.col("c") + base
-        return agg.select(
-            "vid", rank.alias("rank"), F.abs(rank - F.col("pv")).alias("diff"),
-            *flag,
-        )
-
+    args = {"a": float(a), "u": uniform, "b0": (1.0 - a) * uniform}
     if trunc_digits:
-        # byte-parity step, mirroring network_util.py:624-645 exactly:
-        #   step1 = trunc(alpha * x); matvec; trunc per element
-        #   step2 = trunc(uniform * danglesum)   (danglesum untruncated)
-        #   step3 = trunc(trunc(1 - alpha) / N)  (scalar, driver-side)
-        #   x_new = trunc(step1 + step2 + step3)
-        s3 = trunc_py(trunc_py(1.0 - a, trunc_digits) / n, trunc_digits)
+        # step3 = trunc(trunc(1 - alpha) / N), a driver-side scalar
+        args["s3"] = trunc_py(trunc_py(1.0 - a, trunc_digits) / n,
+                              trunc_digits)
+    with temp_view(trans) as trans_view:
+        # every step is one spark.sql call over the same text; only the
+        # previous state and the carried dangling mass change. Parameters
+        # the text does not use are ignored.
+        text = _step_sql(trans_view, t_has_dangling, salt, bool(trunc_digits))
 
-        def step(state: DataFrame, i: int,  # noqa: F811
-                 carried: float | None) -> DataFrame:
-            pre = state.select(F.col("vid").alias("src"),
-                               _tr(F.lit(a) * F.col("rank")).alias("r1"))
-            msgs = trans.join(pre, "src").select(
-                F.col("dst").alias("vid"), (F.col("p") * F.col("r1")).alias("c"))
-            agg = reduce(state, msgs, _tr(F.sum("c")))
-            if t_has_dangling:
-                step2 = _tr(F.lit(uniform) * (F.lit(a) * scalar(carried)))
-            else:
-                step2 = F.lit(0.0)
-            rank = _tr(F.col("c") + step2 + F.lit(s3))
-            return agg.select(
-                "vid", rank.alias("rank"), F.abs(rank - F.col("pv")).alias("diff"),
-                *flag,
-            )
+        def step(state: DataFrame, i: int, carried: float | None) -> DataFrame:
+            # fully LAZY (no driver actions): run_loop materializes it
+            # in one job
+            m = {"m": float(carried)} if t_has_dangling else {}
+            return spark.sql(text, args={**args, **m}, state=state)
 
-    # the loop's exchanges (rank re-hash + dst aggregation) run at the
-    # trans partition count so they align with the persisted structure
-    # instead of the session-wide (relational-sized) shuffle partitions
-    res = run_loop(
-        spark, ranks, step, F.max("diff"), tol, max_iter,
-        partitions=ctx.partitions
-        or int(spark.conf.get("spark.sql.shuffle.partitions")),
-        checkpoint_dir=checkpoint_dir, checkpoint_every=checkpoint_every,
-        start_iteration=start_iter, checkpoint_extra=extra,
-        carry=F.coalesce(
-            F.sum(F.when(F.col("is_dangling"), F.col("rank"))),
-            F.lit(0.0)) if flag else None,
-        # checkpoints keep the layout both paths resume
-        checkpoint_cols=("vid", "rank", "diff"),
-    )
+        # the loop's exchanges (rank re-hash + dst aggregation) run at
+        # the trans partition count so they align with the persisted
+        # structure instead of the session-wide (relational-sized)
+        # shuffle partitions
+        res = run_loop(
+            spark, ranks, step, F.max("diff"), tol, max_iter,
+            partitions=ctx.partitions
+            or int(spark.conf.get("spark.sql.shuffle.partitions")),
+            checkpoint_dir=checkpoint_dir, checkpoint_every=checkpoint_every,
+            start_iteration=start_iter, checkpoint_extra=extra,
+            carry=F.coalesce(
+                F.sum(F.when(F.col("is_dangling"), F.col("rank"))),
+                F.lit(0.0)) if t_has_dangling else None,
+            # checkpoints keep the layout both paths resume
+            checkpoint_cols=("vid", "rank", "diff"),
+        )
     out = res.state.select("vid", "rank")
 
     if mode == "reference":

@@ -10,7 +10,10 @@ One place to set every config that matters at 100 TB:
   partitioning (SURVEY.md §4 note 2).
 * ``spark.sql.shuffle.partitions`` parameterized: on a real cluster this
   is sized to ~2-3x total cores; tests use a small value so 200-partition
-  shuffles don't dominate 500-row fixtures.
+  shuffles don't dominate 500-row fixtures. ``spark.default.parallelism``
+  is set to the same value, so it is not the cluster's task-slot count
+  (``sc.defaultParallelism`` reads it back); graph layouts read the
+  slots from the scheduler (graph/loop.py ``graph_partitions``).
 """
 
 from __future__ import annotations

@@ -32,3 +32,37 @@ def edges_df(spark, triples):
         [(int(s), int(d), float(w)) for s, d, w in triples],
         "src long, dst long, weight double",
     )
+
+
+def steady_step_plan(monkeypatch, run):
+    """The executed plan of a distributed PageRank step over the state
+    its loop ended on, planned as the loop plans it, while the loop's
+    names still exist. ``run()`` runs PageRank once on the distributed
+    path."""
+    import pagerank_service_spark.graph.pagerank as pr
+    from pagerank_service_spark.graph.loop import (
+        aqe_disabled, shuffle_partitions_pinned)
+
+    plans = []
+    run_loop = pr.run_loop
+
+    def spy(spark, state, step, *args, **kw):
+        res = run_loop(spark, state, step, *args, **kw)
+        with aqe_disabled(spark), \
+                shuffle_partitions_pinned(spark, kw["partitions"]):
+            df = step(res.state, res.iterations, 0.0)
+            plans.append(df._jdf.queryExecution().executedPlan())
+        return res
+
+    monkeypatch.setattr(pr, "run_loop", spy)
+    run()
+    return plans[-1]
+
+
+def exchanges(plan) -> int:
+    """Exchange nodes in an executed plan, found by walking its
+    children. Not by matching its string: an InMemoryTableScan prints
+    the exchanges of the plan it cached, which it does not run."""
+    kids = plan.children()
+    return int("Exchange" in plan.nodeName()) + sum(
+        exchanges(kids.apply(i)) for i in range(kids.size()))

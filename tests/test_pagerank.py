@@ -11,9 +11,9 @@ from pyspark.sql import functions as F
 
 from pagerank_service_spark.datagen import fixture_edges, zipf_random_edges
 import pagerank_service_spark.graph.pagerank as pr
-from pagerank_service_spark.graph import oracle
+from pagerank_service_spark.graph import in_task, oracle
 
-from conftest import edges_df
+from conftest import edges_df, steady_step_plan
 
 # (fixture, max_iter): slow-converging fixtures are capped — engine vs
 # oracle at the IDENTICAL iteration count is the same exact semantic
@@ -79,12 +79,12 @@ def test_salt_equals_unsalted(spark):
         assert abs(b[k] - o[k]) < 1e-12
 
 
-def test_salted_hub_10k_matches_and_is_two_stage(spark):
+def test_salted_hub_10k_matches_and_is_two_stage(spark, monkeypatch):
     """SURVEY §4 hub-salting criterion at the named scale: a 10^4-spoke
     star. salt=8 must (a) equal the default path to 1e-12 and (b)
     actually produce the two-stage plan — partial per (dst, producing-
     partition bucket), final per dst — visible as spark_partition_id in
-    the salted aggregation's physical plan."""
+    the physical plan of a salted distributed step."""
     spokes = spark.range(2, 10_002).select(
         F.col("id").alias("src"), F.lit(1).cast("long").alias("dst"),
         F.lit(1.0).alias("weight"))
@@ -100,13 +100,10 @@ def test_salted_hub_10k_matches_and_is_two_stage(spark):
     for k in b:
         assert abs(b[k] - s[k]) < 1e-12
 
-    ctx = pr.prepare_graph(e, add_virtual=False)
-    ranks = ctx.vertices.select("vid", F.lit(1.0 / ctx.n).alias("rank"))
-    msg = pr._messages(ctx, ranks, salt=8)
-    plan = msg._jdf.queryExecution().executedPlan().toString()
+    monkeypatch.setattr(in_task, "IN_TASK_MAX_EDGES", -1)
+    plan = steady_step_plan(
+        monkeypatch, lambda: pr.pagerank(e, salt=8, **kw)).toString()
     assert "spark_partition_id" in plan.lower(), plan
-    for df in (ctx.trans, ctx.vertices, ctx.dangling):
-        df.unpersist()
 
 
 def test_dangling_mass_standard_mode(spark):

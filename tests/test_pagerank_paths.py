@@ -15,9 +15,9 @@ from pyspark.sql import functions as F
 
 import pagerank_service_spark.graph.pagerank as pr
 from pagerank_service_spark.datagen import zipf_random_edges
-from pagerank_service_spark.graph import in_task, oracle
+from pagerank_service_spark.graph import in_task, loop, oracle
 
-from conftest import edges_df
+from conftest import edges_df, exchanges, steady_step_plan
 from test_golden_fixture import *  # noqa: F401,F403
 from test_pagerank import *  # noqa: F401,F403
 from test_trunc_mode import *  # noqa: F401,F403
@@ -149,6 +149,37 @@ def test_distributed_loop_one_job_per_iteration(spark, monkeypatch):
                   oracle.standard_pagerank(HUB, tol=1e-9, max_iter=500), 1e-9)
 
 
+@pytest.mark.parametrize("loaded", [False, True])
+@pytest.mark.parametrize("dangling", [True, False])
+def test_steady_state_step_has_one_exchange(spark, tmp_path, monkeypatch,
+                                            dangling, loaded):
+    """A steady-state step of the distributed loop shuffles once:
+    messages and previous ranks into the GROUP BY vid. The messages
+    join needs no exchange, because the cached trans is laid out by src
+    and the checkpointed state keeps the aggregate's hash(vid) layout.
+    Checked with and without dangling vertices (standard mode, and the
+    reference graph's virtual node), over a prepared context and over
+    one saved and loaded as perfbench loads it."""
+    _use(monkeypatch, "distributed")
+    ctx = pr.prepare_graph(edges_df(spark, HUB), add_virtual=not dangling)
+    assert ctx.has_dangling == dangling
+    if loaded:
+        ctx.save(str(tmp_path / "g"))
+        _unpersist(ctx)
+        ctx = pr.GraphContext.load(spark, str(tmp_path / "g"),
+                                   compact_ids=True)
+    plan = steady_step_plan(monkeypatch, lambda: pr.pagerank_on_context(
+        ctx, mode="standard", tol=0.0, max_iter=2, unpersist=False))
+    assert exchanges(plan) == 1, plan.toString()
+    _unpersist(ctx)
+
+
+def _unpersist(ctx: pr.GraphContext) -> None:
+    for df in (ctx.trans, ctx.vertices, ctx.dangling, ctx.in_strength):
+        if df is not None:
+            df.unpersist()
+
+
 def test_distributed_trunc_with_dangling_matches_oracle(spark, monkeypatch):
     """Trunc mode on the distributed path, over a graph whose dangling
     mass the loop carries from one iteration to the next."""
@@ -270,6 +301,23 @@ def test_in_task_prepare_past_threshold(spark, monkeypatch, num_partitions):
     assert loops == [1]
     want = oracle.reference_pagerank(triples, tol=1e-9, max_iter=1000)
     _assert_close(_ranks(res), want, 1e-6)
+
+
+def test_graph_partitions_whole_waves(spark, monkeypatch):
+    """~75k rows a partition, rounded down to whole waves of the
+    session's 4 task slots, floored at 4 and capped at the shuffle
+    partitions; with no slots registered the ~75k-row count stands."""
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", "32")
+    try:
+        rows = (471_712, 1_200_000, 100, 10**10)
+        assert [loop.graph_partitions(spark, n) for n in rows] \
+            == [4, 16, 4, 32]
+        monkeypatch.setattr(loop, "_task_slots", lambda spark: 0)
+        assert [loop.graph_partitions(spark, n) for n in rows] \
+            == [7, 17, 4, 32]
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", prev)
 
 
 def test_in_task_context_save_load(spark, tmp_path, monkeypatch):

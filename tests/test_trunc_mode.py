@@ -67,9 +67,10 @@ def test_trunc14_reference_mode_matches_oracle(spark):
 
 
 def test_trunc14_rejects_salt(spark):
-    """trunc_digits bypasses _messages, so salt would be silently
-    ignored — the combination must raise (advisor round-4), never run
-    an unsalted loop the caller didn't ask for."""
+    """trunc_digits sums each vertex's messages in one aggregate, so
+    salt's pre-aggregation would change the reference's truncation
+    regime — the combination must raise (advisor round-4), never run a
+    loop the caller didn't ask for."""
     import pytest
 
     triples = fixture_edges("chain10")
